@@ -296,18 +296,19 @@ def q_metrics_monitoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metrics monitoring over a per-snapshot history (operators/monitor):
     the expanding robust control chart flags months whose fail-rate left
     the series' own historical band, and verdict_flips(keep_all=True)
-    annotates pass<->fail transitions vs the previous snapshot — both on
+    annotates pass<->fail transitions vs the previous snapshot — all on
     ONE lineage, so the plan is one pruned scan -> partial+final agg ->
-    ONE hashpartitioning(rule_id) exchange -> two Windows sharing the
-    same sort (a unioned two-branch draft re-scanned lineitem per
-    branch). The chart's float internals (center/scale/z) are
+    one hashpartitioning(rule_id) exchange per detector over the
+    249-row history (CUSUM and chart grouped-map calls, then the flips
+    lag Window; each grouped-map call emits fresh attributes, so the
+    next keyed step re-shuffles — a unioned two-branch draft re-scanned
+    lineitem per branch). The chart's float internals (center/scale/z) are
     numpy-parity-locked in test_monitor.py; the driver row exposes the
     hash-stable columns (fail_rate is a count ratio — bit-exact across
     engines; is_anomaly's nearest |z| is 0.045 from the 2.5 threshold
     on this data, far beyond the ulp-level cross-engine quantile
     drift). A Page CUSUM (warmup=12, slack=0.5, h=4.0) rides the SAME
-    lineage — its windows share the chart's partitioning and sort — and
-    contributes `cusum_alarm`: the sustained-shift detector the
+    lineage and contributes `cusum_alarm`: the sustained-shift detector the
     per-point chart cannot express. Only the boolean is exposed: the
     s_pos/s_neg floats drift ≤3e-14 across engines (running sums), but
     the nearest |s − h| on this data is 0.2145 — verified safe. Input
@@ -1521,8 +1522,9 @@ def q_streaming_metrics_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
       and NULL-pad the chart columns (the batch metrics_monitoring
       row already hash-gates a mostly-NULL direction column).
 
-    Batch==stream equality is each operator's contract, locked
-    point-for-point in test_monitor.py / test_streaming.
+    Batch==stream equality is each operator's contract: both sides run
+    the same numpy kernel, and test_monitor.py locks it point-for-point
+    on every chart column.
 
     Row policy matches metrics_monitoring: expose n_history /
     is_anomaly / bit-exact fail_rate, not the center/scale/z/s floats
@@ -2497,11 +2499,12 @@ SELECT 'verdict' AS kind,
 
 # Expanding robust control chart + verdict flips over the monthly
 # fail-rate history. quantile_cont's window interpolation is the same
-# p*(n-1) linear convention as the Spark Column algebra (center matched
-# bit-exactly on all 249 rows; scale drifts ulps, which is why the row
-# exposes is_anomaly, not scale/z — nearest |z| is 0.045 from the 2.5
-# threshold). 0.10 must be CAST to DOUBLE: DuckDB parses the bare
-# literal as DECIMAL and two months sit at exactly 0.10.
+# p*(n-1) linear convention as numpy.percentile(method="linear") in the
+# chart kernel (center matched bit-exactly on all 231 warm rows; scale
+# drifts ulps on 30 of them, which is why the row exposes is_anomaly,
+# not scale/z — nearest |z| is 0.045 from the 2.5 threshold). 0.10
+# must be CAST to DOUBLE: DuckDB parses the bare literal as DECIMAL and
+# two months sit at exactly 0.10.
 _METRICS_MONITORING_SQL = """
 WITH hist AS (
   SELECT l_returnflag AS rule_id,

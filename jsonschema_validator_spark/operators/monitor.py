@@ -22,53 +22,228 @@ Scale notes
   partitions and daily snapshots this is ~10^9 rows/year worst case,
   trivially Spark-sized and ~10^5 rows in the common un-partitioned
   verdict layout. The monitored table's size never appears.
-- One shuffle, keyed by the series id (rule_id × tag × ...): thousands
-  of balanced keys. Per-series state is the series' own history
-  (``collect_list`` over the preceding frame) — bounded by the snapshot
-  count, e.g. 365 points for a year of daily snapshots; ``max_history``
-  caps it outright (trailing-window chart, streaming-twin semantics).
-- Everything is Column algebra (window + array expressions) inside
-  whole-stage codegen; no Python touches the data.
-- The expanding quantiles use rank = p·(n−1) with linear interpolation —
-  the exact convention shared by Spark ``percentile``, DuckDB
-  ``quantile_cont`` and ``numpy.percentile(method="linear")``, so
-  oracles need no rounding.
+- One shuffle per chart, keyed by the series id (rule_id × tag × ...):
+  thousands of balanced keys. Each series reaches Python as one Arrow
+  table (``applyInArrow``), sorted by ``order_col`` and scored by the
+  numpy kernels below; every other column passes through as Arrow,
+  untouched (a pandas hop would round a bigint beyond 2**53). Per-series
+  memory is the series itself, e.g. 365 points for a year of daily
+  snapshots; ``max_history`` caps each history (trailing-window chart).
+- ``_chart_kernel`` and ``_cusum_kernel`` are the ONE implementation of
+  each statistic: the batch charts start every series from empty state,
+  the streaming twins (``streaming/monitor.py``) carry it across
+  micro-batches, so a replay agrees point-for-point.
+- Quantiles are ``numpy.percentile(method="linear")`` — rank = p·(n−1)
+  with linear interpolation, the convention shared by Spark
+  ``percentile`` and DuckDB ``quantile_cont``.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Callable, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, DoubleType, IntegerType, StructField, StructType
 
 # IQR → sigma for a normal distribution: IQR = 2·Φ⁻¹(0.75)·σ = 1.3489795·σ.
 _IQR_TO_SIGMA = 1.3489795003921634
 
+_CHART_FIELDS = [
+    StructField("n_history", IntegerType()),
+    StructField("center", DoubleType()),
+    StructField("scale", DoubleType()),
+    StructField("z", DoubleType()),
+    StructField("is_anomaly", BooleanType()),
+]
+_CUSUM_FIELDS = [
+    StructField("n_history", IntegerType()),
+    StructField("mu0", DoubleType()),
+    StructField("sigma0", DoubleType()),
+    StructField("s_pos", DoubleType()),
+    StructField("s_neg", DoubleType()),
+    StructField("is_anomaly", BooleanType()),
+]
+# CUSUM state before a series' first point: (calibration buffer, mu0,
+# sigma0, s_pos, s_neg, finite points seen, calibration was constant)
+_CUSUM_START = ((), None, None, 0.0, 0.0, 0, False)
 
-def _finite_or_null(raw: Column) -> Column:
-    """Screen a metric value to NULL unless it is a FINITE number. NaN and
-    ±Inf are both "missing", like null: NaN compares greater than any
-    value in Spark, and one Inf in a history/calibration makes the
-    center/scale aggregates NaN — either way every subsequent point of the
-    series would alarm forever. The streaming twins mirror this rule
-    (math.isfinite) so batch==stream parity holds on poisoned series."""
-    return F.when(
-        raw.isNotNull() & ~F.isnan(raw) & (F.abs(raw) != float("inf")), raw
+
+def _screen(x: np.ndarray, n_seen: int):
+    """Finite mask of ``x`` and, per row, the count of finite points
+    before it (``n_seen`` carried in). Null arrives as NaN; NaN and ±Inf
+    are "missing" too: neither may enter a history, a calibration or a
+    running sum — one Inf makes center/scale NaN, and either would alarm
+    every later point of the series forever."""
+    ok = np.isfinite(x)
+    return ok, n_seen + np.cumsum(ok) - ok
+
+
+def _mean_std(h: np.ndarray):
+    """``(mean, sample stddev, is_constant)`` of ``h``. A constant ``h``
+    anchors to the constant itself with stddev 0 exactly: the mean of n
+    copies of c drifts an ulp from c, and the exact-deviation rule would
+    then flag the constant itself."""
+    if h.min() == h.max():
+        return float(h[0]), 0.0, True
+    return float(h.mean()), float(h.std(ddof=1)), False
+
+
+def _chart_kernel(
+    x: np.ndarray,
+    hist,
+    min_history: int,
+    z_threshold: float,
+    method: str,
+    max_history: Optional[int],
+):
+    """Score each point of one ordered series against the finite points
+    before it. ``hist`` is the carried state: the series' finite points
+    before ``x`` (the trailing ``max_history`` of them when bounded).
+    Returns ``({column: array}, new hist)``; missing points and warm-up
+    rows get null ``center/scale/z`` and are never flagged."""
+    ok, end = _screen(x, len(hist))
+    buf = np.concatenate([np.asarray(hist, dtype=np.float64), x[ok]])
+    start = np.zeros_like(end) if max_history is None else np.maximum(end - max_history, 0)
+    n_hist = end - start
+    scored = ok & (n_hist >= min_history)
+    center = np.full(len(x), np.nan)
+    scale = np.full(len(x), np.nan)
+    # the exact-deviation rule on zero scale: robust IQR == 0 can coexist
+    # with outliers ([5,5,5,100]); classic applies it only to a truly
+    # constant history (a stddev cancelled to 0 at ~1e-16 spread is noise)
+    exact = np.full(len(x), method == "robust")
+    for i in np.flatnonzero(scored):
+        h = buf[start[i] : end[i]]
+        if method == "robust":
+            q1, center[i], q3 = np.percentile(h, [25, 50, 75], method="linear")
+            scale[i] = (q3 - q1) / _IQR_TO_SIGMA
+        else:
+            center[i], scale[i], exact[i] = _mean_std(h)
+    z = np.full(len(x), np.nan)
+    pos = scale > 0
+    z[pos] = (x[pos] - center[pos]) / scale[pos]
+    flag = scored & np.where(pos, np.abs(z) > z_threshold, exact & (x != center))
+    cols = {
+        "n_history": n_hist.astype(np.int32),
+        "center": center,
+        "scale": scale,
+        "z": z,
+        "is_anomaly": flag,
+    }
+    return cols, buf if max_history is None else buf[-max_history:]
+
+
+def _cusum_kernel(
+    x: np.ndarray,
+    state: tuple,
+    warmup: int,
+    slack: float,
+    h: float,
+    target: Optional[float] = None,
+    sigma: Optional[float] = None,
+):
+    """Two-sided Page CUSUM over one ordered series from a carried
+    ``state`` (layout of :data:`_CUSUM_START`). Returns ``({column:
+    array}, new state)``."""
+    calib, mu0, sigma0, sp, sn, n_seen, const0 = state
+    ok, n_hist = _screen(x, n_seen)
+    if target is not None:
+        mu0, sigma0 = float(target), float(sigma)
+        known = np.ones(len(x), dtype=bool)
+    else:
+        if mu0 is None:
+            # Phase I: the series' first ``warmup`` finite points
+            calib = np.concatenate([np.asarray(calib, dtype=np.float64), x[ok]])[:warmup]
+            if len(calib) == warmup:
+                mu0, sigma0, const0 = _mean_std(calib)
+                calib = ()
+        # calibration rows carry null mu0/sigma0: the reference exists
+        # only once the first ``warmup`` finite points have been seen
+        known = n_hist >= warmup
+    scored = ok & known
+    mu0_col = np.full(len(x), np.nan)
+    sigma0_col = np.full(len(x), np.nan)
+    s_pos = np.full(len(x), np.nan)
+    s_neg = np.full(len(x), np.nan)
+    flag = np.zeros(len(x), dtype=bool)
+    if mu0 is not None:
+        mu0_col[known], sigma0_col[known] = mu0, sigma0
+        if sigma0 > 0:
+            for i in np.flatnonzero(scored):
+                d = (x[i] - mu0) / sigma0
+                sp, sn = max(0.0, sp + d - slack), max(0.0, sn - d - slack)
+                s_pos[i], s_neg[i] = sp, sn
+            flag = scored & ((s_pos > h) | (s_neg > h))
+        elif const0:
+            # standardization undefined: any deviation from the constant
+            flag = scored & (x != mu0)
+    cols = {
+        "n_history": n_hist.astype(np.int32),
+        "mu0": mu0_col,
+        "sigma0": sigma0_col,
+        "s_pos": s_pos,
+        "s_neg": s_neg,
+        "is_anomaly": flag,
+    }
+    return cols, (calib, mu0, sigma0, sp, sn, n_seen + int(ok.sum()), const0)
+
+
+def _per_series(
+    df: DataFrame,
+    series_cols: Sequence[str],
+    order_col: str,
+    value_col: str,
+    fields: list,
+    score: Callable[[np.ndarray], dict],
+) -> DataFrame:
+    """``df`` plus the columns ``fields``, computed by ``score`` (ordered
+    float64 values, NaN = missing → {column: array}) over each series in
+    one Arrow grouped-map call. The value is cast by Spark, so the cast
+    rules are Spark's; every other column passes through as Arrow."""
+    value = "__jsv_monitor_value"
+    names = {f.name for f in fields}
+    passed = [f for f in df.schema.fields if f.name not in names]
+    out_schema = StructType(passed + fields)
+
+    def fn(table: pa.Table) -> pa.Table:
+        # Spark's ascending order: nulls first
+        table = table.sort_by([(order_col, "ascending")], null_placement="at_start")
+        cols = score(table.column(value).to_numpy(zero_copy_only=False))
+        out = table.select([f.name for f in passed])
+        for name, arr in cols.items():
+            out = out.append_column(name, pa.array(arr, from_pandas=True))
+        return out
+
+    return (
+        df.withColumn(value, F.col(value_col).cast("double"))
+        .groupBy(*series_cols)
+        .applyInArrow(fn, out_schema)
     )
 
 
-def _interp_quantile(sorted_arr: Column, n: Column, p: float) -> Column:
-    """Linear-interpolated quantile of a SORTED array column (1-indexed
-    ``element_at``; caller guarantees n ≥ 1 on evaluated rows)."""
-    idx = F.lit(float(p)) * (n.cast("double") - F.lit(1.0))
-    lo = F.floor(idx).cast("int")
-    frac = idx - lo.cast("double")
-    lo_v = F.element_at(sorted_arr, lo + F.lit(1)).cast("double")
-    # ceil(idx) == lo when frac == 0; element_at(lo+2) would be out of
-    # bounds on the last element under ANSI mode, so guard the hi probe.
-    hi_v = F.when(frac > 0, F.element_at(sorted_arr, lo + F.lit(2)).cast("double")).otherwise(lo_v)
-    return lo_v + (hi_v - lo_v) * frac
+def _check_chart_args(method: str, min_history: int, max_history: Optional[int]) -> None:
+    if method not in ("robust", "classic"):
+        raise ValueError(f"method must be 'robust' or 'classic', got {method!r}")
+    if min_history < 1:
+        raise ValueError(f"min_history must be >= 1, got {min_history}")
+    if max_history is not None and max_history < min_history:
+        raise ValueError(
+            f"max_history ({max_history}) must be >= min_history ({min_history})"
+        )
+
+
+def _check_cusum_args(target, sigma, warmup: int, h: float) -> None:
+    if warmup < 2 and target is None:
+        raise ValueError(f"warmup must be >= 2 to estimate mu0/sigma0, got {warmup}")
+    if (target is None) != (sigma is None):
+        raise ValueError("target and sigma must be given together (or neither)")
+    if sigma is not None and sigma <= 0:
+        raise ValueError(f"sigma must be > 0, got {sigma}")
+    if h <= 0:
+        raise ValueError(f"h must be > 0, got {h}")
 
 
 def control_chart(
@@ -100,202 +275,30 @@ def control_chart(
     but ``is_anomaly`` is true whenever the value differs from the
     center. For the classic method "constant" is detected as history
     ``min == max`` (exact on the data values) and the center anchors to
-    that constant, NOT the accumulated mean — ``avg`` over n copies of c
-    can drift an ulp from c, which made every point of a perfectly
+    that constant, NOT the accumulated mean — the mean over n copies of
+    c can drift an ulp from c, which made every point of a perfectly
     constant series flag spuriously (caught by the randomized numpy
     sweep). A non-constant history whose stddev still rounds to exactly
     0 (catastrophic cancellation at ~1e-16 relative spread) yields
-    ``z = null`` and never flags. The robust center is exact Column
-    algebra on sorted data values, so it needs no such anchor. Null and
-    NaN values are never flagged and do not enter histories (NaN compares
-    greater than everything in Spark, so a NaN in a history would
-    otherwise poison every later point's flag).
+    ``z = null`` and never flags. Null, NaN and ±Inf values are
+    "missing": they never enter histories, are never flagged and get
+    null ``center/scale/z``.
 
     ``max_history`` (default None = expanding) bounds each history to the
     trailing ``max_history`` NON-NULL values — the exact semantics of the
     streaming twin's state bound
     (:func:`~jsonschema_validator_spark.streaming.monitor.streaming_control_chart`),
     so a bounded batch chart and a stream replay agree point-for-point
-    past the eviction horizon too. At scale this is the knob that keeps
-    the per-row window buffer O(max_history) instead of O(series length)
-    (a 10-year daily series otherwise carries a 3650-element array per
-    row). Plan shape: the bounded frame must see only non-null rows
-    (a rows-frame counts nulls), so null-valued rows are split out and
-    unioned back with null ``center/scale/z`` — the filter preserves the
-    shuffle partitioning, so the whole thing still runs on ONE exchange
-    (the null branch is a ``ReusedExchange``; locked by the plan test).
-    The two modes differ on null rows' ``center/scale`` only: unbounded
-    reports the history's band even for a null point, bounded reports
-    null (matching the streaming twin); ``n_history/z/is_anomaly`` agree
-    everywhere.
+    past the eviction horizon too.
 
     Adds columns: ``n_history, center, scale, z, is_anomaly``.
     """
-    if method not in ("robust", "classic"):
-        raise ValueError(f"method must be 'robust' or 'classic', got {method!r}")
-    if min_history < 1:
-        raise ValueError(f"min_history must be >= 1, got {min_history}")
-    if max_history is not None:
-        if max_history < min_history:
-            raise ValueError(
-                f"max_history ({max_history}) must be >= min_history ({min_history})"
-            )
-        return _bounded_control_chart(
-            df, series_cols, order_col, value_col, min_history, z_threshold,
-            method, max_history,
-        )
-    w = (
-        Window.partitionBy(*[F.col(c) for c in series_cols])
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # NaN is "missing", like null (the streaming twin's rule): it must
-    # not enter histories — NaN compares greater than any value in Spark,
-    # so one NaN in a history would flag every subsequent point forever
-    raw = F.col(value_col).cast("double")
-    v = _finite_or_null(raw)
-    df = df.withColumn("n_history", F.count(v).over(w).cast("int"))
-    warm = F.col("n_history") >= F.lit(min_history)
-    return _attach_chart_stats(
-        df, w, v, F.col("n_history"), warm, method, z_threshold,
-        not_scored=~warm | v.isNull(),
-    )
+    _check_chart_args(method, min_history, max_history)
 
+    def score(x):
+        return _chart_kernel(x, (), min_history, z_threshold, method, max_history)[0]
 
-def _attach_chart_stats(
-    df: DataFrame,
-    w_hist,
-    v: Column,
-    n: Column,
-    warm: Column,
-    method: str,
-    z_threshold: float,
-    not_scored: Column,
-) -> DataFrame:
-    """Attach ``center, scale, z, is_anomaly`` computed over the history
-    frame ``w_hist`` — the ONE copy of the per-method stat rules, shared
-    by the expanding and the bounded chart (a fix to either center/scale
-    rule must not be appliable to one path only; that divergence class
-    produced the cusum constant-calibration bug).
-
-    ``n`` must equal the count of values in the frame (the caller owns
-    ``n_history``); ``not_scored`` marks rows that must never flag
-    (warmup, null/NaN values).
-    """
-    if method == "robust":
-        # materialize the sorted history ONCE: every further expression is
-        # a projection over the array column, so the plan carries a single
-        # collect_list buffer (12 duplicated window expressions otherwise —
-        # Spark does not CSE window expressions across aliases).
-        df = df.withColumn("_hist", F.sort_array(F.collect_list(v).over(w_hist)))
-        hist = F.col("_hist")
-        center = F.when(warm, _interp_quantile(hist, n, 0.5))
-        iqr = F.when(
-            warm, _interp_quantile(hist, n, 0.75) - _interp_quantile(hist, n, 0.25)
-        )
-        scale = iqr / F.lit(_IQR_TO_SIGMA)
-        # IQR == 0 can coexist with outliers outside the quartiles
-        # ([5,5,5,100]): deviation from the (exact) median is the rule.
-        zero_scale_anom = v != F.col("center")
-    else:
-        # one select → one Window operator carrying all four aggregates
-        df = df.select(
-            "*",
-            F.min(v).over(w_hist).alias("_hmin"),
-            F.max(v).over(w_hist).alias("_hmax"),
-            F.avg(v).over(w_hist).alias("_havg"),
-            F.stddev_samp(v).over(w_hist).alias("_hstd"),
-        )
-        const_hist = F.col("_hmin") == F.col("_hmax")
-        # anchor a constant history's center to the constant itself —
-        # avg(n copies of c) drifts an ulp from c, breaking the exact
-        # deviation check below.
-        center = F.when(
-            warm, F.when(const_hist, F.col("_hmin")).otherwise(F.col("_havg"))
-        )
-        scale = F.when(
-            warm,
-            F.when(const_hist, F.lit(0.0)).otherwise(
-                F.coalesce(F.col("_hstd"), F.lit(0.0))
-            ),
-        )
-        # scale == 0 without a constant history (stddev cancelled to 0 at
-        # ~1e-16 relative spread) is numerical noise, never an anomaly.
-        zero_scale_anom = const_hist & (v != F.col("center"))
-    df = df.withColumn("center", center).withColumn("scale", scale)
-    z = F.when(F.col("scale") > 0, (v - F.col("center")) / F.col("scale"))
-    return (
-        df.withColumn("z", z)
-        .withColumn(
-            "is_anomaly",
-            F.when(not_scored, F.lit(False)).otherwise(
-                F.coalesce(
-                    F.abs(F.col("z")) > F.lit(float(z_threshold)),
-                    # zero scale: method-specific exact deviation rule
-                    zero_scale_anom,
-                )
-            ),
-        )
-        .drop("_hist", "_hmin", "_hmax", "_havg", "_hstd")
-    )
-
-
-def _bounded_control_chart(
-    df: DataFrame,
-    series_cols: Sequence[str],
-    order_col: str,
-    value_col: str,
-    min_history: int,
-    z_threshold: float,
-    method: str,
-    max_history: int,
-) -> DataFrame:
-    """``control_chart`` with the history bounded to the trailing
-    ``max_history`` non-null values (streaming-twin semantics).
-
-    A ``rowsBetween(-k, -1)`` frame counts null rows, so the bounded
-    stats run over the null-FILTERED rows (where the frame's last k rows
-    ARE the last k values); null rows rejoin via union with null chart
-    columns. Both branches hang off the same count window, and a filter
-    preserves hash partitioning and sort order, so the physical plan has
-    one real exchange + one sort; the null branch re-reads the shuffle
-    output (``ReusedExchange``).
-    """
-    w_unb = (
-        Window.partitionBy(*[F.col(c) for c in series_cols])
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_k = (
-        Window.partitionBy(*[F.col(c) for c in series_cols])
-        .orderBy(order_col)
-        .rowsBetween(-max_history, -1)
-    )
-    # NaN = missing, like null (same rule as the unbounded path): NaN
-    # rows go to the null branch and never enter the bounded frames
-    raw = F.col(value_col).cast("double")
-    v = _finite_or_null(raw)
-    # bounded history size = min(preceding non-null count, k) — valid for
-    # null rows too (count() skips nulls), so compute it BEFORE the split.
-    df = df.withColumn(
-        "n_history",
-        F.least(F.count(v).over(w_unb), F.lit(max_history)).cast("int"),
-    )
-    warm = F.col("n_history") >= F.lit(min_history)
-    # the filtered branch's rows are all valid, so ``not_scored`` is just
-    # the warmup condition; the stat rules are the shared single copy
-    nn = _attach_chart_stats(
-        df.filter(v.isNotNull()), w_k, v, F.col("n_history"), warm, method,
-        z_threshold, not_scored=~warm,
-    )
-    nl = (
-        df.filter(v.isNull())
-        .withColumn("center", F.lit(None).cast("double"))
-        .withColumn("scale", F.lit(None).cast("double"))
-        .withColumn("z", F.lit(None).cast("double"))
-        .withColumn("is_anomaly", F.lit(False))
-    )
-    return nn.unionByName(nl.select(*nn.columns))
+    return _per_series(df, series_cols, order_col, value_col, _CHART_FIELDS, score)
 
 
 def cusum_chart(
@@ -324,120 +327,26 @@ def cusum_chart(
     ``target``/``sigma`` give a known reference (Phase II only); when
     None, μ₀/σ₀ are estimated per series from its first ``warmup``
     non-null values (Phase I), and those calibration points are never
-    scored. A constant calibration anchors μ₀ to the constant itself
-    (detected as calibration ``min == max`` — ``avg`` over n copies of c
-    drifts an ulp from c, which would make the exact-deviation rule
-    below flag the constant itself; the same anchor the classic control
-    chart uses) and sets σ₀ = 0 exactly. σ₀ = 0 falls back to the
-    exact-deviation rule: any post-warmup value ≠ μ₀ alarms, ``s_pos/
-    s_neg`` stay null (the standardization is undefined). Null AND NaN
-    values are never scored and do not advance the sums — a NaN metric
-    (mean over an empty partition upstream) must not poison the running
-    sums of everything after it (NaN compares greater than any value in
-    Spark, so one NaN contribution would alarm every subsequent point
-    forever).
-
-    Scale notes: the recursion has the closed form ``S⁺_i = P_i −
-    min(0, min_{j≤i} P_j)`` with ``P`` the running sum of ``(d − k)``
-    (and symmetrically for S⁻), so the whole chart is two stacked
-    window passes — running sum, then running min over it — sharing one
-    exchange keyed by the series id and one sort, all inside codegen'd
-    Column algebra; no per-row Python, no O(n²) history arrays at all.
+    scored and carry null ``mu0/sigma0``. A constant calibration anchors
+    μ₀ to the constant itself (detected as calibration ``min == max`` —
+    the mean over n copies of c drifts an ulp from c, which would make
+    the exact-deviation rule below flag the constant itself; the same
+    anchor the classic control chart uses) and sets σ₀ = 0 exactly.
+    σ₀ = 0 falls back to the exact-deviation rule: any post-warmup value
+    ≠ μ₀ alarms, ``s_pos/s_neg`` stay null (the standardization is
+    undefined). Null, NaN and ±Inf values are never scored and do not
+    advance the sums — a NaN metric (mean over an empty partition
+    upstream) must not poison the running sums of everything after it.
 
     Adds columns: ``n_history`` (non-null points seen before this one),
     ``mu0, sigma0, s_pos, s_neg, is_anomaly``.
     """
-    if warmup < 2 and target is None:
-        raise ValueError(f"warmup must be >= 2 to estimate mu0/sigma0, got {warmup}")
-    if (target is None) != (sigma is None):
-        raise ValueError("target and sigma must be given together (or neither)")
-    if sigma is not None and sigma <= 0:
-        raise ValueError(f"sigma must be > 0, got {sigma}")
-    if h <= 0:
-        raise ValueError(f"h must be > 0, got {h}")
-    keys = [F.col(c) for c in series_cols]
-    w_incl = (
-        Window.partitionBy(*keys)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = (
-        Window.partitionBy(*keys)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    raw = F.col(value_col).cast("double")
-    # NaN is "missing", like null: it must neither calibrate nor
-    # contribute (one NaN in a running sum poisons every later point)
-    v = _finite_or_null(raw)
-    # 1-based index among the series' valid values (count includes the
-    # current row when valid) — drives warmup membership and n_history.
-    df = df.withColumn("_nn_rank", F.count(v).over(w_incl))
-    df = df.withColumn(
-        "n_history",
-        (F.col("_nn_rank") - F.when(v.isNotNull(), 1).otherwise(0)).cast("int"),
-    )
-    if target is not None:
-        df = df.withColumn("mu0", F.lit(float(target))).withColumn(
-            "sigma0", F.lit(float(sigma))
-        )
-        scored = v.isNotNull()
-    else:
-        calib = F.when(F.col("_nn_rank") <= F.lit(warmup), v)
-        # full-partition frame: same keys and sort → same single exchange.
-        # min == max detects a constant calibration EXACTLY on the data
-        # values; anchor mu0 to it (avg drifts an ulp over n copies).
-        df = (
-            df.withColumn("_cmin", F.min(calib).over(w_all))
-            .withColumn("_cmax", F.max(calib).over(w_all))
-            .withColumn(
-                "mu0",
-                F.when(
-                    F.col("_cmin") == F.col("_cmax"), F.col("_cmin")
-                ).otherwise(F.avg(calib).over(w_all)),
-            )
-            .withColumn(
-                "sigma0",
-                F.when(F.col("_cmin") == F.col("_cmax"), F.lit(0.0)).otherwise(
-                    F.coalesce(F.stddev_samp(calib).over(w_all), F.lit(0.0))
-                ),
-            )
-            .withColumn("_const0", F.col("_cmin") == F.col("_cmax"))
-            .drop("_cmin", "_cmax")
-        )
-        scored = v.isNotNull() & (F.col("_nn_rank") > F.lit(warmup))
-    d = (v - F.col("mu0")) / F.col("sigma0")
-    # contributions are null off the scored set (and when sigma0 == 0), so
-    # the running sums simply skip those rows
-    contrib_ok = scored & (F.col("sigma0") > 0)
-    df = df.withColumn(
-        "_p_pos", F.sum(F.when(contrib_ok, d - F.lit(float(slack)))).over(w_incl)
-    ).withColumn(
-        "_p_neg", F.sum(F.when(contrib_ok, -d - F.lit(float(slack)))).over(w_incl)
-    )
-    # running min over the prefix column: stacked window, same exchange
-    s_pos = F.col("_p_pos") - F.least(F.lit(0.0), F.min("_p_pos").over(w_incl))
-    s_neg = F.col("_p_neg") - F.least(F.lit(0.0), F.min("_p_neg").over(w_incl))
-    df = df.withColumn(
-        "s_pos", F.when(contrib_ok, s_pos)
-    ).withColumn("s_neg", F.when(contrib_ok, s_neg))
-    alarm = (F.col("s_pos") > F.lit(float(h))) | (F.col("s_neg") > F.lit(float(h)))
-    # the exact-deviation rule applies only to a TRULY constant
-    # calibration; a non-constant one whose stddev cancelled to exactly 0
-    # is numerical noise and never alarms (the classic chart's rule)
-    if target is None:
-        zero_sigma_alarm = (
-            scored & F.col("_const0") & (F.col("sigma0") == 0) & (v != F.col("mu0"))
-        )
-    else:
-        zero_sigma_alarm = F.lit(False)
-    out = df.withColumn(
-        "is_anomaly",
-        F.when(~scored, F.lit(False)).otherwise(
-            F.coalesce(alarm, zero_sigma_alarm)
-        ),
-    ).drop("_nn_rank", "_p_pos", "_p_neg")
-    return out.drop("_const0") if target is None else out
+    _check_cusum_args(target, sigma, warmup, h)
+
+    def score(x):
+        return _cusum_kernel(x, _CUSUM_START, warmup, slack, h, target, sigma)[0]
+
+    return _per_series(df, series_cols, order_col, value_col, _CUSUM_FIELDS, score)
 
 
 def verdict_flips(
@@ -453,9 +362,8 @@ def verdict_flips(
 
     ``keep_all=True`` returns EVERY row annotated with a ``flipped``
     boolean (direction ``''`` on non-flips) instead of filtering — the
-    shape for composing with :func:`control_chart` on one lineage: the
-    ``lag`` window shares the chart's partitioning and sort, so the
-    combined plan has ONE exchange and ONE scan of the history.
+    shape for composing with :func:`control_chart` on one lineage, so the
+    combined plan scans the history once.
 
     One shuffle keyed by the series id; ``lag`` over the per-series
     order. Input is the metrics history (see :func:`metrics_history`),

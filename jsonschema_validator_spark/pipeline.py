@@ -1,30 +1,33 @@
 """The flagship image-caption validation suite (the north rule, end-to-end).
 
 Composes every check family the engine has over one image+caption table
-``(image_id, bytes, w, h, fmt, caption, phash)``:
+``(image_id, bytes, w, h, fmt, caption, phash)``; ``suite_verdicts()``
+unions the verdict rows of:
 
 1. keyword validation  — one-pass packed predicates → per-partition verdicts
-2. column stats        — null ratio / min / max / HLL distinct in ONE agg
-3. uniqueness          — image_id + phash, salted two-phase agg (skew-safe)
-4. referential         — fmt → dim_formats broadcast anti-join
-5. drift               — KS + PSI on w/h/phash histograms vs a baseline
-6. decode invariant    — Arrow-batched decode: payload decodes, dims match
+2. uniqueness          — image_id + phash, salted two-phase agg (skew-safe)
+3. referential         — fmt → dim_formats broadcast anti-join
+4. drift               — KS + PSI on w/h/phash histograms vs a baseline
+5. decode invariant    — Arrow-batched decode: payload decodes, dims match
+
+``stats()`` (null ratio / min / max / HLL distinct in ONE agg) profiles
+the same table on request; it emits no verdict rows.
 
 Scale design (10^12 rows / 1000 executors):
 - every family is a SEPARATE Spark job over the same scan, each single-pass;
-  the `bytes` column is ONLY read by (6) — column pruning keeps scans 1-5
+  the `bytes` column is ONLY read by (5) — column pruning keeps scans 1-4
   metadata-cheap (verified via .explain ReadSchema).
-- (3) uses the salted two-phase aggregation so the 8 hot phashes (5 % of all
+- (2) uses the salted two-phase aggregation so the 8 hot phashes (5 % of all
   rows at scale) cannot melt a single reducer.
-- (4) broadcasts the 3-row dim table — no shuffle of the fact table.
-- (5) aggregates to ≤n_buckets rows BEFORE any window/cumsum — driver-safe.
+- (3) broadcasts the 3-row dim table — no shuffle of the fact table.
+- (4) aggregates to ≤n_buckets rows BEFORE any window/cumsum — driver-safe.
 - every family returns a verdict row in one common shape so the whole suite
   unions into a single small verdicts table: ``(family, rule_id, n_checked,
   n_failed, pass)``.
 
 Reference parity: family (1) reproduces the per-keyword error semantics of
-/root/reference (rules/*.go); families 2-6 are the scale-out checks the
-north rule adds on top (SURVEY.md §2.5).
+the reference Go library (rules/*.go); families 2-5 are the scale-out
+checks the north rule adds on top (SURVEY.md §2.5).
 """
 
 from __future__ import annotations

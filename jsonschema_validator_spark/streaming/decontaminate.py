@@ -29,6 +29,7 @@ join operator is the correct tool.
 
 from __future__ import annotations
 
+import re
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Iterator
 
@@ -39,6 +40,8 @@ from pyspark.sql import functions as F
 from jsonschema_validator_spark.operators.dedup import word_shingles
 
 _SIX_DP = Decimal("0.000001")
+# Java's ``\s``: the six ASCII whitespace characters, nothing else
+_JAVA_WS = re.compile(r"\s+", flags=re.ASCII)
 
 
 def _round6(x: float) -> float:
@@ -52,15 +55,15 @@ def _py_shingles(text: str, k: int) -> set:
     """Pure-Python twin of operators.dedup.word_shingles (distinct k-word
     shingles of the canonicalized text; whole text when < k tokens).
 
-    Delegates to oracle._word_shingles, which replicates the JVM
-    canonicalization EXACTLY: Spark's ``trim`` strips 0x20 only (NOT tabs/
-    newlines — those collapse to a single space, leaving an empty leading/
-    trailing token) and Java ``\\s`` is ASCII-only. A ``.strip()``-based
-    twin silently diverges on tab-led documents (caught by
-    test_py_shingles_matches_jvm_word_shingles)."""
-    from jsonschema_validator_spark.oracle import _word_shingles
-
-    return set(_word_shingles(text, k))
+    Canonicalizes the way the JVM does: Spark's ``trim`` strips 0x20 only
+    (NOT tabs/newlines — those collapse to a single space, leaving an
+    empty leading/trailing token) and Java ``\\s`` is ASCII-only. A
+    ``.strip()``-based twin silently diverges on tab-led documents
+    (caught by test_py_shingles_matches_jvm_word_shingles)."""
+    toks = _JAVA_WS.sub(" ", text.strip(" ").lower()).split(" ")
+    if len(toks) < k:
+        return {" ".join(toks)}
+    return {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
 
 
 def benchmark_shingle_set(

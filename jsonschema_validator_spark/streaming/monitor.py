@@ -1,86 +1,99 @@
-"""Streaming control chart — stateful per-series anomaly detection.
+"""Streaming monitors — stateful per-series twins of the batch monitors.
 
-The batch chart (operators/monitor.control_chart) sees a series' whole
-history in one expanding window; a streaming metrics feed (per-window
-verdict rates from streaming/validate.py, per-window drift stats, any
-keyed numeric telemetry) needs the SAME judgment per arriving point
-without re-reading history. This is the stateful-twin pattern the repo
-uses for dedup and decontamination: per-series state carries the value
-history (``applyInPandasWithState``), each new point is scored against
-the state BEFORE being appended to it — exactly the batch chart's
-"preceding rows only" frame, so batch and stream agree point-for-point
-on a replay of the same series (locked by the parity test).
+The batch charts (operators/monitor) see a series' whole history at
+once; a streaming metrics feed (per-window verdict rates from
+streaming/validate.py, per-window drift stats, any keyed numeric
+telemetry) needs the SAME judgment per arriving point without re-reading
+history. This is the stateful-twin pattern the repo uses for dedup and
+decontamination: per-series state (``applyInPandasWithState``) carries
+what the batch operator would have seen before the micro-batch, and each
+micro-batch's rows of a series are scored in ``order_col`` order by the
+very kernel the batch operator runs (``_chart_kernel`` /
+``_cusum_kernel``), started from that state — so batch and stream agree
+point-for-point on a replay of the same series (locked by the parity
+tests). This module holds no scoring arithmetic of its own.
 
 Scale notes
 -----------
-- State is O(series × max_history) doubles. ``max_history`` (default
-  512) bounds it: the chart degrades from expanding to rolling-window —
-  at 10^12-row scale the monitored series are METRICS (rule × tag ×
-  window), thousands of keys, so state is a few MB; the RocksDB state
-  store provider covers extreme key counts.
-- Within a micro-batch, a series' rows are processed in ``order_col``
-  order, updating the in-memory history between rows — identical to the
-  batch window semantics; across batches the state carries the history
-  forward.
-- The quantile math is ``numpy.percentile(method="linear")`` — the same
-  rank = p·(n−1) linear interpolation the batch chart computes in
-  Column algebra (bit-identical convention, see PLANS.md §29).
+- Chart state is O(series × max_history) doubles. ``max_history``
+  (default 512) bounds it: the chart degrades from expanding to
+  rolling-window — at 10^12-row scale the monitored series are METRICS
+  (rule × tag × window), thousands of keys, so state is a few MB; the
+  RocksDB state store provider covers extreme key counts.
+- CUSUM state is O(1) per series once calibration completes (two running
+  sums, the reference, a point count); flips state is one boolean.
 """
 
 from __future__ import annotations
 
-import math
-from typing import Iterator, Sequence
+from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
+from pyspark.sql.types import BooleanType, StringType, StructField, StructType
+
+from jsonschema_validator_spark.operators.monitor import (
+    _CHART_FIELDS,
+    _CUSUM_FIELDS,
+    _CUSUM_START,
+    _chart_kernel,
+    _check_chart_args,
+    _check_cusum_args,
+    _cusum_kernel,
 )
 
-from jsonschema_validator_spark.operators.monitor import _IQR_TO_SIGMA
 
+def _per_series_stateful(
+    stream: DataFrame,
+    series_cols: Sequence[str],
+    order_col: str,
+    value_col: str,
+    fields: list,
+    state_ddl: str,
+    start: tuple,
+    step: Callable[[pd.DataFrame, tuple], tuple],
+) -> DataFrame:
+    """The series/order/value columns of ``stream`` plus ``fields``.
+    ``step(pdf, state) -> (out_pdf, state)`` sees each micro-batch's rows
+    of one series sorted by ``order_col`` and the state the series ended
+    the previous micro-batch with (``start`` for a new series); the state
+    is stored under ``state_ddl``."""
+    keep = list(series_cols) + [order_col, value_col]
+    in_fields = {f.name: f for f in stream.schema.fields}
+    missing = [c for c in keep if c not in in_fields]
+    if missing:
+        raise ValueError(f"stream is missing columns: {missing}")
+    out_schema = StructType([in_fields[c] for c in keep] + fields)
 
-def _score(hist: list, x: float, min_history: int, z_threshold: float, method: str):
-    """Score one point against its preceding history — the pandas twin of
-    the batch chart's per-row expression (same interpolation, same
-    zero-scale and warmup rules)."""
-    n = len(hist)
-    if n < min_history or x is None or (
-        isinstance(x, float) and not math.isfinite(x)
-    ):
-        return n, None, None, None, False
-    if method == "robust":
-        center = float(np.percentile(hist, 50, method="linear"))
-        iqr = float(
-            np.percentile(hist, 75, method="linear")
-            - np.percentile(hist, 25, method="linear")
+    def fn(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        st = tuple(state.get) if state.exists else start
+        parts = [pdf for pdf in pdfs if len(pdf)]
+        out = None
+        if parts:
+            pdf = pd.concat(parts, ignore_index=True)
+            out, st = step(pdf.sort_values(order_col, kind="stable"), st)
+        # Spark state takes plain Python values, not numpy ones
+        state.update(
+            tuple(v.tolist() if isinstance(v, (np.ndarray, np.generic)) else v for v in st)
         )
-        scale = iqr / _IQR_TO_SIGMA
-    else:
-        hmin, hmax = min(hist), max(hist)
-        if hmin == hmax:
-            # constant history: anchor to the constant — np.mean(n copies
-            # of c) drifts an ulp from c (same anchor as the batch chart)
-            center, scale = hmin, 0.0
-        else:
-            center = float(np.mean(hist))
-            scale = float(np.std(hist, ddof=1)) if n >= 2 else 0.0
-    if scale > 0:
-        z = (x - center) / scale
-        return n, center, scale, z, abs(z) > z_threshold
-    if method == "classic" and min(hist) != max(hist):
-        # stddev cancelled to 0 on a non-constant history: noise, no flag
-        return n, center, scale, None, False
-    return n, center, scale, None, x != center
+        if out is not None and len(out):
+            yield out
+
+    return stream.select(*keep).groupBy(*series_cols).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_ddl,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _values(pdf: pd.DataFrame, value_col: str) -> np.ndarray:
+    return pdf[value_col].to_numpy(dtype=np.float64, na_value=np.nan)
 
 
 def streaming_control_chart(
@@ -107,69 +120,17 @@ def streaming_control_chart(
     identical to the batch chart called with the same ``max_history``
     (point-for-point, locked by the parity test).
     """
-    if method not in ("robust", "classic"):
-        raise ValueError(f"method must be 'robust' or 'classic', got {method!r}")
-    if min_history < 1:
-        raise ValueError(f"min_history must be >= 1, got {min_history}")
-    if max_history < min_history:
-        raise ValueError(
-            f"max_history ({max_history}) must be >= min_history ({min_history})"
+    _check_chart_args(method, min_history, max_history)
+
+    def step(pdf, st):
+        cols, hist = _chart_kernel(
+            _values(pdf, value_col), st[0], min_history, z_threshold, method, max_history
         )
-    series_cols = list(series_cols)
-    keep = series_cols + [order_col, value_col]
-    in_fields = {f.name: f for f in stream.schema.fields}
-    missing = [c for c in keep if c not in in_fields]
-    if missing:
-        raise ValueError(f"stream is missing columns: {missing}")
-    out_schema = StructType(
-        [in_fields[c] for c in keep]
-        + [
-            StructField("n_history", IntegerType()),
-            StructField("center", DoubleType()),
-            StructField("scale", DoubleType()),
-            StructField("z", DoubleType()),
-            StructField("is_anomaly", BooleanType()),
-        ]
-    )
+        return pdf.assign(**cols), (hist,)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        hist = list(state.get[0]) if state.exists else []
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        if not parts:
-            state.update((hist,))
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values(order_col, kind="stable")
-        rows = []
-        for _, row in pdf.iterrows():
-            raw = row[value_col]
-            # NaN AND ±Inf are "missing", like null (the batch charts'
-            # _finite_or_null rule): neither may enter history/calibration
-            x = (
-                None
-                if pd.isna(raw) or not math.isfinite(float(raw))
-                else float(raw)
-            )
-            n, center, scale, z, flag = _score(
-                hist, x, min_history, z_threshold, method
-            )
-            rows.append(
-                [row[c] for c in keep] + [n, center, scale, z, bool(flag)]
-            )
-            if x is not None:
-                hist.append(x)
-                if len(hist) > max_history:
-                    del hist[: len(hist) - max_history]
-        state.update((hist,))
-        yield pd.DataFrame(rows, columns=keep + ["n_history", "center", "scale", "z", "is_anomaly"])
-
-    return stream.select(*keep).groupBy(*series_cols).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="history array<double>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _per_series_stateful(
+        stream, series_cols, order_col, value_col, _CHART_FIELDS,
+        "history array<double>", ((),), step,
     )
 
 
@@ -189,126 +150,25 @@ def streaming_cusum_chart(
     state (two doubles + the calibration buffer), so unlike the control
     chart there is no history to bound: state is O(1) per series once
     calibration completes. A replay of an ordered series reproduces the
-    batch chart point-for-point (parity test) — the batch Phase-I
-    calibration uses each series' first ``warmup`` non-null values in
-    ``order_col`` order, which is exactly what the stream accumulates.
+    batch chart point-for-point, ``mu0/sigma0`` included (parity test) —
+    the batch Phase-I calibration uses each series' first ``warmup``
+    non-null values in ``order_col`` order, which is exactly what the
+    stream accumulates.
 
     Output: the input columns plus ``n_history, mu0, sigma0, s_pos,
-    s_neg, is_anomaly`` (the batch chart's columns). One divergence, on
-    the informational columns only: the batch chart's full-partition
-    window back-fills ``mu0/sigma0`` onto calibration rows; the stream
-    cannot see the future, so those rows carry null until calibration
-    completes. ``n_history/s_pos/s_neg/is_anomaly`` agree row-for-row.
+    s_neg, is_anomaly`` (the batch chart's columns).
     """
-    if warmup < 2 and target is None:
-        raise ValueError(f"warmup must be >= 2 to estimate mu0/sigma0, got {warmup}")
-    if (target is None) != (sigma is None):
-        raise ValueError("target and sigma must be given together (or neither)")
-    if sigma is not None and sigma <= 0:
-        raise ValueError(f"sigma must be > 0, got {sigma}")
-    if h <= 0:
-        raise ValueError(f"h must be > 0, got {h}")
-    series_cols = list(series_cols)
-    keep = series_cols + [order_col, value_col]
-    in_fields = {f.name: f for f in stream.schema.fields}
-    missing = [c for c in keep if c not in in_fields]
-    if missing:
-        raise ValueError(f"stream is missing columns: {missing}")
-    out_schema = StructType(
-        [in_fields[c] for c in keep]
-        + [
-            StructField("n_history", IntegerType()),
-            StructField("mu0", DoubleType()),
-            StructField("sigma0", DoubleType()),
-            StructField("s_pos", DoubleType()),
-            StructField("s_neg", DoubleType()),
-            StructField("is_anomaly", BooleanType()),
-        ]
-    )
-    explicit = target is not None
+    _check_cusum_args(target, sigma, warmup, h)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # state: (calibration buffer, mu0, sigma0, s_pos, s_neg, nn_seen,
-        #         const0 — whether the calibration was exactly constant)
-        if state.exists:
-            calib, mu0, sigma0, sp, sn, nn_seen, const0 = state.get
-            calib = list(calib)
-        else:
-            calib, mu0, sigma0, sp, sn, nn_seen, const0 = [], None, None, 0.0, 0.0, 0, False
-        if explicit:
-            mu0, sigma0 = float(target), float(sigma)
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        if not parts:
-            state.update((calib, mu0, sigma0, sp, sn, nn_seen, const0))
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values(order_col, kind="stable")
-        rows = []
-        for _, row in pdf.iterrows():
-            raw = row[value_col]
-            # NaN AND ±Inf are "missing", like null (the batch charts'
-            # _finite_or_null rule): neither may enter history/calibration
-            x = (
-                None
-                if pd.isna(raw) or not math.isfinite(float(raw))
-                else float(raw)
-            )
-            n_hist = nn_seen
-            if x is None:
-                rows.append([row[c] for c in keep] + [n_hist, mu0, sigma0, None, None, False])
-                continue
-            nn_seen += 1
-            if not explicit and mu0 is None:
-                calib.append(x)
-                if len(calib) == warmup:
-                    cmin, cmax = min(calib), max(calib)
-                    if cmin == cmax:
-                        # constant calibration: anchor to the constant —
-                        # np.mean drifts an ulp and np.std(ddof=1) of the
-                        # drifted mean is tiny-NONZERO, which would both
-                        # break the exact-deviation rule and feed garbage
-                        # standardized deviations (batch anchor mirrored)
-                        mu0, sigma0, const0 = cmin, 0.0, True
-                    else:
-                        mu0 = float(np.mean(calib))
-                        sigma0 = float(np.std(calib, ddof=1))
-                        const0 = False
-                    calib = []
-                rows.append([row[c] for c in keep] + [n_hist, mu0, sigma0, None, None, False])
-                continue
-            if sigma0 == 0:
-                # exact-deviation rule for a truly constant calibration;
-                # a non-constant one whose stddev cancelled to exactly 0
-                # is numerical noise and never alarms (batch rule)
-                flag = bool(x != mu0) if (const0 or explicit) else False
-                rows.append(
-                    [row[c] for c in keep]
-                    + [n_hist, mu0, sigma0, None, None, flag]
-                )
-                continue
-            d = (x - mu0) / sigma0
-            sp = max(0.0, sp + d - slack)
-            sn = max(0.0, sn - d - slack)
-            rows.append(
-                [row[c] for c in keep]
-                + [n_hist, mu0, sigma0, sp, sn, bool(sp > h or sn > h)]
-            )
-        state.update((calib, mu0, sigma0, sp, sn, nn_seen, const0))
-        yield pd.DataFrame(
-            rows,
-            columns=keep + ["n_history", "mu0", "sigma0", "s_pos", "s_neg", "is_anomaly"],
-        )
+    def step(pdf, st):
+        cols, st = _cusum_kernel(_values(pdf, value_col), st, warmup, slack, h, target, sigma)
+        return pdf.assign(**cols), st
 
-    return stream.select(*keep).groupBy(*series_cols).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=(
-            "calib array<double>, mu0 double, sigma0 double, "
-            "s_pos double, s_neg double, nn_seen int, const0 boolean"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _per_series_stateful(
+        stream, series_cols, order_col, value_col, _CUSUM_FIELDS,
+        "calib array<double>, mu0 double, sigma0 double, "
+        "s_pos double, s_neg double, nn_seen int, const0 boolean",
+        _CUSUM_START, step,
     )
 
 
@@ -330,52 +190,23 @@ def streaming_verdict_flips(
     (parity test). State is O(1) per series (``prev_pass`` + a has-prev
     flag), the smallest state of the monitor family.
     """
-    series_cols = list(series_cols)
-    keep = series_cols + [order_col, pass_col]
-    in_fields = {f.name: f for f in stream.schema.fields}
-    missing = [c for c in keep if c not in in_fields]
-    if missing:
-        raise ValueError(f"stream is missing columns: {missing}")
-    out_schema = StructType(
-        [in_fields[c] for c in keep]
-        + [
-            StructField("prev_pass", BooleanType()),
-            StructField("direction", StringType()),
-        ]
-    )
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            has_prev, prev = state.get
-        else:
-            has_prev, prev = False, None
-        parts = [pdf for pdf in pdfs if len(pdf)]
-        if not parts:
-            state.update((has_prev, prev))
-            return
-        pdf = pd.concat(parts, ignore_index=True).sort_values(order_col, kind="stable")
-        rows = []
-        for _, row in pdf.iterrows():
-            raw = row[pass_col]
+    def step(pdf, st):
+        has_prev, prev = st
+        prevs, flipped = [], []
+        for raw in pdf[pass_col]:
             cur = None if pd.isna(raw) else bool(raw)
-            if has_prev and prev is not None and cur is not None and prev != cur:
-                rows.append(
-                    [row[c] for c in keep]
-                    + [prev, "recovered" if cur else "regressed"]
-                )
+            prevs.append(prev)
+            flipped.append(has_prev and prev is not None and cur is not None and prev != cur)
             has_prev, prev = True, cur
-        state.update((has_prev, prev))
-        if rows:
-            yield pd.DataFrame(rows, columns=keep + ["prev_pass", "direction"])
+        out = pdf.assign(prev_pass=prevs)[np.array(flipped, dtype=bool)]
+        direction = ["recovered" if p else "regressed" for p in out[pass_col]]
+        return out.assign(direction=direction), (has_prev, prev)
 
-    return stream.select(*keep).groupBy(*series_cols).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="has_prev boolean, prev_pass boolean",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _per_series_stateful(
+        stream, series_cols, order_col, pass_col,
+        [StructField("prev_pass", BooleanType()), StructField("direction", StringType())],
+        "has_prev boolean, prev_pass boolean", (False, None), step,
     )
 
 

@@ -236,25 +236,6 @@ def test_control_chart_bounded_matches_streaming_twin(spark, tmp_path):
                 assert got[k][col] == pytest.approx(want[k][col], rel=1e-9), (k, col)
 
 
-def test_control_chart_bounded_single_real_exchange(spark, tmp_path):
-    """The bounded chart's null branch must REUSE the series shuffle, not
-    re-shuffle: one real exchange in the final adaptive plan."""
-    rows = [("s%d" % (i % 3), i, float(i % 7) if i % 5 else None) for i in range(90)]
-    p = str(tmp_path / "bounded_plan_in.parquet")
-    spark.createDataFrame(rows, "series string, ord int, value double").write.parquet(p)
-    out = control_chart(
-        spark.read.parquet(p), ["series"], "ord", "value", max_history=6
-    )
-    out.collect()
-    phys = out._jdf.queryExecution().executedPlan().toString()
-    final = phys.split("Initial Plan")[0]
-    n_exchange = final.count("Exchange hashpartitioning")
-    n_reused = final.count("ReusedExchange")
-    assert n_reused >= 1, final[:2000]
-    # every exchange string beyond the first real one is the reused ref
-    assert n_exchange - n_reused == 1, final[:2000]
-
-
 @pytest.mark.parametrize("method", ["robust", "classic"])
 def test_control_chart_nan_is_missing(spark, method):
     """NaN behaves exactly like null in both chart modes: never enters a
@@ -421,7 +402,7 @@ def _np_cusum(vals, target, sigma, warmup, slack, h):
 
 
 def test_cusum_numpy_parity_randomized(spark):
-    """Row-for-row parity of the prefix-sum closed form against the
+    """Row-for-row parity of the CUSUM kernel against an independent
     textbook max(0, ...) recursion, across randomized series with nulls,
     shifts, spikes, and constant calibrations."""
     rng = np.random.default_rng(4848)
@@ -577,15 +558,6 @@ def test_cusum_validates_args(spark):
         cusum_chart(df, ["series"], "ord", "value", h=0.0)
 
 
-def test_cusum_single_shuffle_plan(spark):
-    """All four window passes (count, calibration stats, prefix sums,
-    running mins) share the series key and sort: one exchange total."""
-    rows = [("s", i, float(i)) for i in range(12)]
-    df = spark.createDataFrame(rows, "series string, ord int, value double")
-    qe = cusum_chart(df, ["series"], "ord", "value")._jdf.queryExecution()
-    assert qe.executedPlan().toString().count("hashpartitioning") == 1
-
-
 def test_verdict_flips_directions(spark):
     rows = [
         # rule r1 flips fail at ord 2, recovers at ord 3
@@ -689,18 +661,45 @@ def test_metrics_history_empty_store_raises(spark, tmp_path):
         lineage_history(spark, store)
 
 
-def test_control_chart_single_shuffle_plan(spark):
-    """Scale shape: ONE exchange keyed by the series id — the robust
-    chart's expanding quantiles all share the same window spec, so the
-    optimizer collapses them into a single shuffle."""
-    rows = [("s", i, float(i)) for i in range(10)]
-    df = spark.createDataFrame(rows, "series string, ord int, value double")
-    qe = control_chart(df, ["series"], "ord", "value")._jdf.queryExecution()
-    # one history buffer: the sorted collect_list appears once, not once
-    # per quantile expression
-    assert qe.optimizedPlan().toString().count("collect_list") == 1
-    # one shuffle keyed by the series id
-    assert qe.executedPlan().toString().count("hashpartitioning") == 1
+@pytest.mark.parametrize(
+    "chart",
+    [
+        lambda df: control_chart(df, ["series"], "ord", "value"),
+        lambda df: control_chart(df, ["series"], "ord", "value", method="classic"),
+        lambda df: control_chart(df, ["series"], "ord", "value", max_history=6),
+        lambda df: cusum_chart(df, ["series"], "ord", "value"),
+    ],
+    ids=["robust", "classic", "bounded", "cusum"],
+)
+def test_chart_single_shuffle_plan(spark, tmp_path, chart):
+    """Scale shape: each chart call is ONE exchange keyed by the series
+    id in the final adaptive plan, null rows included."""
+    rows = [("s%d" % (i % 3), i, float(i % 7) if i % 5 else None) for i in range(90)]
+    p = str(tmp_path / "plan_in.parquet")
+    spark.createDataFrame(rows, "series string, ord int, value double").write.parquet(p)
+    out = chart(spark.read.parquet(p))
+    out.collect()
+    final = out._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+    assert final.count("Exchange hashpartitioning") == 1, final[:2000]
+
+
+@pytest.mark.parametrize(
+    "chart",
+    [
+        lambda df: control_chart(df, ["series"], "ord", "value", min_history=1),
+        lambda df: cusum_chart(df, ["series"], "ord", "value", warmup=2),
+    ],
+    ids=["control_chart", "cusum_chart"],
+)
+def test_chart_passes_bigint_through_exactly(spark, chart):
+    """Columns the chart does not compute pass through untouched: a
+    nullable bigint beyond 2**53 comes back exact (a pandas round trip
+    turns 2**53+1 into 2**53)."""
+    big = 2**53 + 1
+    rows = [("s", i, float(i), big + i if i != 1 else None) for i in range(4)]
+    df = spark.createDataFrame(rows, "series string, ord int, value double, id long")
+    got = {r["ord"]: r["id"] for r in chart(df).collect()}
+    assert got == {0: big, 1: None, 2: big + 2, 3: big + 3}
 
 
 # ---------------------------------------------------------------------------
@@ -731,17 +730,23 @@ def _drain_stream(spark, src_dir, name, **kw):
 
 def test_streaming_chart_matches_batch(spark, tmp_path):
     """Replay of the same series through 3 micro-batches == the batch
-    expanding chart, point for point (state carries history across
-    batches; within-batch rows are scored in order)."""
+    expanding chart, point for point on all five chart columns (state
+    carries history across batches; within-batch rows are scored in
+    order). Series c's null and NaN points are missing on both sides:
+    null center/scale/z, never flagged, never in a history."""
     import numpy as np
 
     rng = np.random.default_rng(11)
     series = {
         "a": list(rng.normal(5.0, 1.0, 9)) + [50.0, 5.1, 5.2],
         "b": list(rng.normal(0.0, 0.2, 12)),
+        "c": [None if i % 4 == 1 else float("nan") if i % 5 == 3 else float(v)
+              for i, v in enumerate(rng.normal(1.0, 0.3, 12))],
     }
     rows = [
-        (sid, i, float(v)) for sid, vals in series.items() for i, v in enumerate(vals)
+        (sid, i, v if v is None else float(v))
+        for sid, vals in series.items()
+        for i, v in enumerate(vals)
     ]
     src = tmp_path / "stream_src"
     src.mkdir()
@@ -759,12 +764,12 @@ def test_streaming_chart_matches_batch(spark, tmp_path):
     }
     assert set(got) == set(want)
     for k in want:
-        assert got[k]["n_history"] == want[k]["n_history"], k
-        assert got[k]["is_anomaly"] == want[k]["is_anomaly"], k
-        if want[k]["z"] is None:
-            assert got[k]["z"] is None, k
-        else:
-            assert got[k]["z"] == pytest.approx(want[k]["z"], abs=1e-9), k
+        for col in ("n_history", "center", "scale", "z", "is_anomaly"):
+            assert got[k][col] == want[k][col], (k, col)
+    # the missing points of series c are unscored on both sides
+    for i in (1, 3, 5, 8, 9):
+        assert want[("c", i)]["center"] is None and not want[("c", i)]["is_anomaly"]
+    assert want[("c", 11)]["n_history"] == 6
     # the planted spike is flagged in the stream; its neighbors are not
     flagged = {k for k, r in got.items() if r["is_anomaly"]}
     assert ("a", 9) in flagged
@@ -888,10 +893,9 @@ def _drain_cusum_stream(spark, src_dir, name, **kw):
 
 def test_streaming_cusum_matches_batch(spark, tmp_path):
     """Replaying ordered series through 3 micro-batches reproduces the
-    batch CUSUM row-for-row: the recursion state (two doubles) carries
-    across batches; calibration rows are scored by neither side. The
-    only allowed divergence is mu0/sigma0 on pre-calibration rows (the
-    batch window back-fills them, the stream cannot see the future)."""
+    batch CUSUM row-for-row, on every column: the recursion state (two
+    doubles) carries across batches; calibration rows are scored by
+    neither side and carry null mu0/sigma0 on both."""
     import numpy as np
 
     rng = np.random.default_rng(21)
@@ -932,10 +936,9 @@ def test_streaming_cusum_matches_batch(spark, tmp_path):
                 assert got[k][col] is None, (k, col)
             else:
                 assert got[k][col] == pytest.approx(want[k][col], rel=1e-9, abs=1e-9), (k, col)
-        # mu0/sigma0 must agree wherever the stream has them
         for col in ("mu0", "sigma0"):
-            if got[k][col] is not None:
-                assert got[k][col] == pytest.approx(want[k][col], rel=1e-12), (k, col)
+            assert got[k][col] == want[k][col], (k, col)
+    assert want[("a", 5)]["mu0"] is None and want[("a", 6)]["mu0"] is not None
     # the +0.9σ drift in series a must alarm somewhere post-calibration
     assert any(r["is_anomaly"] for (s, _), r in got.items() if s == "a")
 
