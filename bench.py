@@ -206,12 +206,42 @@ def run_scaling(levels=(4, 16), n: int = SCALING_N, pairs: int = 2) -> dict:
     return result
 
 
+# start line shared by the workers of one burn pool (set by _burn_pool)
+_START = None
+
+
+def _set_start(barrier) -> None:
+    global _START
+    _START = barrier
+
+
+def _burn_pool(workers: int):
+    """A pool whose burns start their timed loops together: each burn does
+    its own setup, then waits on a shared Barrier, so no worker's loop runs
+    partly uncontended while the others are still forking or allocating.
+    One task per worker per map (a worker blocked on the barrier cannot
+    take a second task). Spawned, not forked: the caller may already run
+    a JVM gateway's threads."""
+    import multiprocessing as mp
+
+    ctx = mp.get_context("spawn")
+    return ctx.Pool(
+        workers, initializer=_set_start, initargs=(ctx.Barrier(workers, timeout=120),)
+    )
+
+
+def _await_start() -> None:
+    if _START is not None:
+        _START.wait()
+
+
 def _bound_burn_cpu(n_iter: int) -> float:
     """Cache-resident CPU burn (zlib over a 1 MB buffer): scales with core
     count, insensitive to DRAM bandwidth."""
     import zlib
 
     data = os.urandom(1 << 20)
+    _await_start()
     t0 = time.perf_counter()
     for _ in range(n_iter):
         zlib.compress(data, 6)
@@ -228,6 +258,7 @@ def _bound_burn_membw(n_iter: int) -> float:
     b = np.empty_like(a)
     # warm-up: fault the pages in before the timed region
     np.add(a, 1, out=b)
+    _await_start()
     t0 = time.perf_counter()
     for _ in range(n_iter):
         np.add(a, 1, out=b)
@@ -255,7 +286,6 @@ def run_host_bounds(levels=(4, 16)) -> dict:
     how close it sits to the CPU bound is the engine's doing, where the
     ceiling itself sits is the host's.
     """
-    import multiprocessing as mp
     import statistics
 
     def measure(burn, workers: int, n_iter: int) -> float:
@@ -264,8 +294,9 @@ def run_host_bounds(levels=(4, 16)) -> dict:
         # pool per call, pool-wall timing would charge every fork's numpy
         # import / 50 MB allocation / os.urandom setup to the burn — a
         # constant absolute inflation of both legs that overstates the
-        # recorded ceiling on contended hosts.
-        with mp.Pool(workers) as p:
+        # recorded ceiling on contended hosts. The loops start together
+        # (_burn_pool), so every worker's window is fully contended.
+        with _burn_pool(workers) as p:
             slowest = max(p.map(burn, [n_iter] * workers))
         return workers * n_iter / slowest  # jobs/sec
 
@@ -306,8 +337,10 @@ def host_speed_index() -> dict:
     run_host_bounds/run_scaling). Best-of-N estimator: this fingerprints
     the host's CAPABILITY (its class), so the least-interfered burst is
     the signal and slower reps are contention to exclude — medians still
-    swung 30% rep-to-rep under transient co-tenant load."""
-    import multiprocessing as mp
+    swung 30% rep-to-rep under transient co-tenant load. The medians are
+    recorded beside the best (``*_median``) so a reader sees the spread
+    between burst and sustained speed (turbo boost lifts the best)."""
+    import statistics
     import zlib
 
     data = os.urandom(1 << 20)
@@ -319,18 +352,20 @@ def host_speed_index() -> dict:
         return n_iter / (time.perf_counter() - t0)
 
     one(5)  # warm-up
-    cpu_1core = max(one(20) for _ in range(5))
+    ones = [one(20) for _ in range(5)]
 
     workers = os.cpu_count() or 1
-    with mp.Pool(workers) as p:
+    with _burn_pool(workers) as p:
         p.map(_bound_burn_cpu, [2] * workers)  # warm the pool
         alls = []
         for _ in range(3):
             slowest = max(p.map(_bound_burn_cpu, [12] * workers))
             alls.append(workers * 12 / slowest)
     return {
-        "cpu_1core": round(cpu_1core, 1),
+        "cpu_1core": round(max(ones), 1),
+        "cpu_1core_median": round(statistics.median(ones), 1),
         "cpu_allcore": round(max(alls), 1),
+        "cpu_allcore_median": round(statistics.median(alls), 1),
         "cores": workers,
     }
 

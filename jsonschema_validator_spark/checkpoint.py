@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from jsonschema_validator_spark.engine import Validator
 from jsonschema_validator_spark.operators.stats import hll_sketches
+from jsonschema_validator_spark.session import local_frame
 from jsonschema_validator_spark.spec import Spec
 from jsonschema_validator_spark.sources.tables import SnapshotTable
 
@@ -154,7 +155,7 @@ class CheckpointStore:
         rows = spec_diff(
             self.suggested_spec(old_snapshot), self.suggested_spec(new_snapshot)
         )
-        return spark.createDataFrame(rows, _DIFF_SCHEMA)
+        return local_frame(spark, rows, _DIFF_SCHEMA)
 
     def _completed_only(self, df: DataFrame) -> DataFrame:
         """Restrict persisted rows to COMPLETED snapshots. The designed

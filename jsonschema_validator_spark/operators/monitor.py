@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, IntegerType, StructField, StructType
 
+from jsonschema_validator_spark.session import local_frame
+
 # IQR → sigma for a normal distribution: IQR = 2·Φ⁻¹(0.75)·σ = 1.3489795·σ.
 _IQR_TO_SIGMA = 1.3489795003921634
 
@@ -405,12 +407,13 @@ def metrics_history(spark: SparkSession, store) -> DataFrame:
             "checkpoint store has no completed snapshots — run "
             "validate_resumable() first"
         )
-    ords = spark.createDataFrame(
-        [(r["snapshot_id"], i, int(r["n_rows"]), float(r["wall_sec"])) for i, r in enumerate(lineage)],
-        schema="snapshot_id string, snapshot_ord int, n_rows long, wall_sec double",
+    ords = local_frame(
+        spark,
+        [(r["snapshot_id"], i) for i, r in enumerate(lineage)],
+        "snapshot_id string, snapshot_ord int",
     )
     m = store.metrics(spark)
-    return m.join(F.broadcast(ords.drop("n_rows", "wall_sec")), "snapshot_id").withColumn(
+    return m.join(F.broadcast(ords), "snapshot_id").withColumn(
         "fail_rate",
         F.when(
             F.col("n_checked") > 0, F.col("n_failed") / F.col("n_checked")
@@ -496,10 +499,9 @@ def lineage_history(spark: SparkSession, store) -> DataFrame:
         )
         for i, r in enumerate(lineage)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
-        schema=(
-            "snapshot_id string, snapshot_ord int, n_rows long, "
-            "wall_sec double, rows_per_sec double"
-        ),
+        "snapshot_id string, snapshot_ord int, n_rows long, "
+        "wall_sec double, rows_per_sec double",
     )

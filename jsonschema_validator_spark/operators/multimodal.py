@@ -3,8 +3,8 @@
 BASELINE.json input_hint: "Image payload checks decode bytes in Arrow-batched
 UDFs with a per-row invariant of decoded-pixel allclose (PSNR≥40dB for
 lossy) and caption equality" — and "no per-row Python" means no row-at-a-time
-Python UDFs: decode runs inside ``mapInPandas`` over Arrow batches; numpy
-does the pixel math vectorized per image.
+Python UDFs: decode runs inside ``mapInPandas``/``mapInArrow`` over Arrow
+batches; numpy does the pixel math vectorized per image.
 
 The actual byte→pixel codecs live in sources/codecs.py (real PNG subset +
 a clearly-marked stub lossy codec, since the container has no image libs —
@@ -22,10 +22,11 @@ Scale notes:
 from __future__ import annotations
 
 import os
-from typing import Iterator, Optional
+from typing import Iterator, Optional, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -88,51 +89,96 @@ def decode_profile(df: DataFrame, id_col: str = "image_id", bytes_col: str = "by
     return sel.mapInPandas(run, schema=DECODE_SCHEMA)
 
 
-def _decode_with_declared(sel: DataFrame) -> DataFrame:
-    """Single-pass decode that carries the declared dims through the Arrow
-    batch — no join back against the fact table (a join would both shuffle
-    the 100 TB table AND cross-match duplicated image_ids)."""
+# Both decode paths emit the same rows: one violation row per bad payload
+# in the engine's ``(path, message, value, tag, param)`` shape, plus one
+# COUNT row per decoded table (every column null but ``n_rows``, the rows
+# it checked). The count rides the decode pass, so a verdict's
+# ``n_checked`` needs no second scan and no job at plan build.
+CHECKS_SCHEMA = (
+    "image_id string, path string, message string, value string, "
+    "tag string, param string, n_rows bigint"
+)
+_CHECKS_ARROW = pa.schema(
+    [(c, pa.string()) for c in ("image_id", "path", "message", "value", "tag", "param")]
+    + [("n_rows", pa.int64())]
+)
+
+
+def _check_images(table, id_col: str, bytes_col: str, w_col: str, h_col: str):
+    """Check every payload of one Arrow table; return its violation rows
+    and trailing count row as one RecordBatch (``CHECKS_SCHEMA``).
+
+    - tag ``required``: payload is null (rule.go:100 — a missing payload is
+      a `required` violation, not a decode failure)
+    - tag ``decode``: payload fails to decode (truncated/corrupt)
+    - tag ``dims``: decoded (w, h) != declared (w, h); skipped when a
+      declared dim is null
+    """
     from jsonschema_validator_spark.sources.codecs import decode_image
 
-    schema = (
-        "image_id string, decode_ok boolean, payload_null boolean, "
-        "dec_w int, dec_h int, decode_error string, _w int, _h int"
+    ws = table.column(w_col).to_numpy(zero_copy_only=False)
+    hs = table.column(h_col).to_numpy(zero_copy_only=False)
+    idx, tags, msgs = [], [], []
+    for i, mv in _iter_binary_rows(table, bytes_col):
+        if mv is None:
+            tag, msg = "required", "required property 'bytes' is missing"
+        else:
+            try:
+                h, w, _ = decode_image(mv).shape
+            except Exception as exc:  # noqa: BLE001 - a bad payload is a violation row, never a failed job
+                tag, msg = "decode", f"image payload failed to decode: {str(exc)[:200]}"
+            else:
+                dw, dh = ws[i], hs[i]
+                if np.isnan(dw) or np.isnan(dh) or (int(dw) == w and int(dh) == h):
+                    continue
+                tag = "dims"
+                msg = f"decoded dimensions {w}x{h} do not match declared {int(dw)}x{int(dh)}"
+        idx.append(i)
+        tags.append(tag)
+        msgs.append(msg)
+    k = len(idx)
+    ids = table.column(id_col).take(pa.array(idx, pa.int64())).to_pylist()
+    return pa.RecordBatch.from_pydict(
+        {
+            "image_id": ids + [None],
+            "path": ["$.bytes"] * k + [None],
+            "message": msgs + [None],
+            "value": [None] * (k + 1),
+            "tag": tags + [None],
+            "param": [""] * k + [None],
+            "n_rows": [None] * k + [table.num_rows],
+        },
+        schema=_CHECKS_ARROW,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ok, nul, dw, dh, err = [], [], [], [], []
-            for data in b["bytes"]:
-                nul.append(data is None)
-                try:
-                    px = decode_image(bytes(data) if data is not None else None)
-                    h, w, _ = px.shape
-                    ok.append(True)
-                    dw.append(w)
-                    dh.append(h)
-                    err.append(None)
-                except Exception as exc:  # noqa: BLE001
-                    ok.append(False)
-                    dw.append(None)
-                    dh.append(None)
-                    err.append(str(exc)[:200])
-            out = pd.DataFrame(
-                {
-                    "image_id": b["image_id"],
-                    "decode_ok": ok,
-                    "payload_null": nul,
-                    "dec_w": dw,
-                    "dec_h": dh,
-                    "decode_error": err,
-                    "_w": b["_w"],
-                    "_h": b["_h"],
-                }
-            )
-            for c in ("dec_w", "dec_h", "_w", "_h"):
-                out[c] = out[c].astype("Int32")
-            yield out
 
-    return sel.mapInPandas(run, schema=schema)
+def violation_rows(checks: DataFrame) -> DataFrame:
+    """The violation rows of a ``CHECKS_SCHEMA`` frame (count rows dropped)."""
+    return checks.where(F.col("tag").isNotNull()).drop("n_rows")
+
+
+def image_checks(
+    df: DataFrame,
+    id_col: str = "image_id",
+    bytes_col: str = "bytes",
+    w_col: str = "w",
+    h_col: str = "h",
+) -> DataFrame:
+    """Decode every payload of ``df`` (Arrow channel: the JVM scan ships the
+    pruned columns to the Python task) → ``CHECKS_SCHEMA`` rows, one count
+    row per Arrow batch."""
+    sel = df.select(
+        F.col(id_col).alias("image_id"),
+        F.col(bytes_col).alias("bytes"),
+        F.col(w_col).cast("int").alias("w"),
+        F.col(h_col).cast("int").alias("h"),
+    )
+
+    def run(batches):
+        for b in batches:
+            yield _check_images(pa.Table.from_batches([b]), "image_id", "bytes", "w", "h")
+
+    return sel.mapInArrow(run, schema=CHECKS_SCHEMA)
 
 
 def image_invariant_violations(
@@ -142,70 +188,10 @@ def image_invariant_violations(
     w_col: str = "w",
     h_col: str = "h",
 ) -> DataFrame:
-    """Violation rows for the image invariants, in the engine's
-    ``(path, message, value, tag, param)`` shape:
-
-    - tag ``decode``: payload fails to decode (truncated/corrupt)
-    - tag ``dims``:   decoded (w, h) != declared (w, h)
-    """
-    sel = df.select(
-        F.col(id_col).alias("image_id"),
-        F.col(bytes_col).alias("bytes"),
-        F.col(w_col).alias("_w"),
-        F.col(h_col).alias("_h"),
-    )
-    j = _decode_with_declared(sel)
-    # BOTH violation kinds from ONE pass over the decode output: a unionAll
-    # of two filters would execute the decode UDF twice (each union branch
-    # is its own subtree — Spark does not share the common scan+UDF)
-    decode_struct = F.struct(
-        F.lit("$.bytes").alias("path"),
-        F.concat(
-            F.lit("image payload failed to decode: "), F.col("decode_error")
-        ).alias("message"),
-        F.lit(None).cast("string").alias("value"),
-        F.lit("decode").alias("tag"),
-        F.lit("").alias("param"),
-    )
-    dims_struct = F.struct(
-        F.lit("$.bytes").alias("path"),
-        F.format_string(
-            "decoded dimensions %dx%d do not match declared %dx%d",
-            F.col("dec_w"),
-            F.col("dec_h"),
-            F.col("_w"),
-            F.col("_h"),
-        ).alias("message"),
-        F.lit(None).cast("string").alias("value"),
-        F.lit("dims").alias("tag"),
-        F.lit("").alias("param"),
-    )
-    required_struct = F.struct(
-        F.lit("$.bytes").alias("path"),
-        # rule.go:100 — a missing payload is a `required` violation, not a
-        # decode failure (the reference skips other keywords on absent values)
-        F.lit("required property 'bytes' is missing").alias("message"),
-        F.lit(None).cast("string").alias("value"),
-        F.lit("required").alias("tag"),
-        F.lit("").alias("param"),
-    )
-    dims_bad = (
-        F.col("decode_ok")
-        & F.col("_w").isNotNull()
-        & F.col("_h").isNotNull()
-        & ((F.col("dec_w") != F.col("_w")) | (F.col("dec_h") != F.col("_h")))
-    )
-    arr = F.filter(
-        F.array(
-            F.when(F.col("payload_null"), required_struct),
-            F.when(~F.col("payload_null") & ~F.col("decode_ok"), decode_struct),
-            F.when(dims_bad, dims_struct),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    return j.select("image_id", F.explode(arr).alias("_v")).select(
-        "image_id", "_v.path", "_v.message", "_v.value", "_v.tag", "_v.param"
-    )
+    """Violation rows for the image invariants (tags ``required``,
+    ``decode``, ``dims``; see :func:`image_checks`) in the engine's
+    ``(path, message, value, tag, param)`` shape, keyed by ``image_id``."""
+    return violation_rows(image_checks(df, id_col, bytes_col, w_col, h_col))
 
 
 # ---------------------------------------------------------------------------
@@ -220,21 +206,16 @@ def image_invariant_violations(
 # file(s) with pyarrow (column-pruned to exactly what the check needs) and
 # decodes zero-copy buffer slices. This is the standard architecture of
 # production multimodal pipelines (the bytes never round-trip through the
-# JVM), and on a cluster the same pattern reads from the object store; the
-# file list would come from the table's manifest (Iceberg data files).
-
-
-def _file_units(spark, path: str, files_per_task: int = 1) -> "DataFrame":
-    import glob as _glob
-
-    files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-    if not files:
-        raise ValueError(f"no parquet files under {path}")
-    units = [
-        (files[i : i + files_per_task],)
-        for i in range(0, len(files), files_per_task)
-    ]
-    return spark.createDataFrame(units, "files array<string>").repartition(len(units))
+# JVM), and on a cluster the same pattern reads from the object store.
+#
+# The file list is the DataFrame's own (``df.inputFiles()``), so the check
+# covers exactly the rows of the DataFrame it is given; callers use this
+# path only when that DataFrame is a plain column-pruned scan of the files
+# (``pruned_scan_files``), and fall back to the Arrow channel otherwise.
+# The units are indexed by ``spark.range(0, n_units, 1, n_units)`` — one
+# JVM-generated row per task, the unit's file list captured in the closure
+# — so no Python-side table and no round-robin Exchange runs before the
+# decode.
 
 
 def _iter_binary_rows(table, bytes_col: str):
@@ -278,6 +259,64 @@ def _iter_binary_rows(table, bytes_col: str):
         idx += len(chunk)
 
 
+def pruned_scan_files(df: DataFrame, columns: Sequence[str]) -> Optional[list]:
+    """``df.inputFiles()`` when ``df`` is exactly its parquet files' rows —
+    its optimized plan is a parquet scan, at most under a projection of
+    plain columns, and ``columns`` are columns of ``df`` stored in those
+    files (not partition columns) — else None. It only inspects the plan;
+    no Spark job runs."""
+    if not set(columns) <= set(df.columns):
+        return None
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.nodeName() == "Project":
+        exprs = plan.projectList()
+        if any(
+            exprs.apply(i).getClass().getSimpleName() != "AttributeReference"
+            for i in range(exprs.size())
+        ):
+            return None
+        plan = plan.child()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().toString() != "Parquet"
+        or not set(columns) <= set(rel.dataSchema().fieldNames())
+    ):
+        return None
+    return sorted(df.inputFiles())
+
+
+def image_checks_files(
+    spark,
+    files: Sequence[str],
+    id_col: str = "image_id",
+    bytes_col: str = "bytes",
+    w_col: str = "w",
+    h_col: str = "h",
+    files_per_task: int = 1,
+) -> DataFrame:
+    """:func:`image_checks` over parquet ``files`` read directly with
+    pyarrow in the Python tasks (see the direct-read note above); one
+    count row per file."""
+    import pyarrow.parquet as pq
+
+    units = [list(files[i : i + files_per_task]) for i in range(0, len(files), files_per_task)]
+    cols = [id_col, bytes_col, w_col, h_col]
+
+    def run(batches):
+        for b in batches:
+            for u in b.column("id").to_pylist():
+                for f in units[u]:
+                    t = pq.read_table(f, columns=cols, use_threads=False)
+                    yield _check_images(t, id_col, bytes_col, w_col, h_col)
+
+    return spark.range(0, len(units), 1, max(len(units), 1)).mapInArrow(
+        run, schema=CHECKS_SCHEMA
+    )
+
+
 def image_invariant_violations_files(
     spark,
     path: str,
@@ -288,72 +327,16 @@ def image_invariant_violations_files(
     files_per_task: int = 1,
 ) -> DataFrame:
     """Same output as :func:`image_invariant_violations`, but each Spark
-    task reads its parquet files directly with pyarrow (see module note)."""
-    import pyarrow.parquet as pq
+    task reads the ``*.parquet`` files under ``path`` directly with
+    pyarrow (see the direct-read note above)."""
+    import glob
 
-    from jsonschema_validator_spark.sources.codecs import decode_image
-
-    units = _file_units(spark, path, files_per_task)
-    cols = [id_col, bytes_col, w_col, h_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows: dict = {
-                "image_id": [], "path": [], "message": [],
-                "value": [], "tag": [], "param": [],
-            }
-            for files in b["files"]:
-                for f in files:
-                    t = pq.read_table(f, columns=cols, use_threads=False)
-                    ids = t.column(id_col)
-                    ws = t.column(w_col).to_numpy(zero_copy_only=False)
-                    hs = t.column(h_col).to_numpy(zero_copy_only=False)
-                    for i, mv in _iter_binary_rows(t, bytes_col):
-                        if mv is None:
-                            rows["image_id"].append(ids[i].as_py())
-                            rows["path"].append("$.bytes")
-                            rows["message"].append(
-                                "required property 'bytes' is missing"
-                            )
-                            rows["value"].append(None)
-                            rows["tag"].append("required")
-                            rows["param"].append("")
-                            continue
-                        try:
-                            px = decode_image(mv)
-                        except Exception as exc:  # noqa: BLE001 - decode must never kill the job (parity with the channel path)
-                            rows["image_id"].append(ids[i].as_py())
-                            rows["path"].append("$.bytes")
-                            rows["message"].append(
-                                f"image payload failed to decode: {str(exc)[:200]}"
-                            )
-                            rows["value"].append(None)
-                            rows["tag"].append("decode")
-                            rows["param"].append("")
-                            continue
-                        h, w, _ = px.shape
-                        dw, dh = ws[i], hs[i]
-                        if (
-                            not np.isnan(dw)
-                            and not np.isnan(dh)
-                            and (int(dw) != w or int(dh) != h)
-                        ):
-                            rows["image_id"].append(ids[i].as_py())
-                            rows["path"].append("$.bytes")
-                            rows["message"].append(
-                                f"decoded dimensions {w}x{h} do not match "
-                                f"declared {int(dw)}x{int(dh)}"
-                            )
-                            rows["value"].append(None)
-                            rows["tag"].append("dims")
-                            rows["param"].append("")
-            yield pd.DataFrame(rows)
-
-    schema = (
-        "image_id string, path string, message string, value string, "
-        "tag string, param string"
+    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    if not files:
+        raise ValueError(f"no parquet files under {path}")
+    return violation_rows(
+        image_checks_files(spark, files, id_col, bytes_col, w_col, h_col, files_per_task)
     )
-    return units.mapInPandas(run, schema=schema)
 
 
 def caption_equality_violations(

@@ -24,6 +24,8 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jsonschema_validator_spark.session import local_frame
+
 
 def duplicate_keys(
     df: DataFrame,
@@ -163,8 +165,7 @@ def multi_key_uniqueness(
     )
     # left join against the key list so every key emits a verdict row even
     # on an EMPTY table (zero groups)
-    spark = df.sparkSession
-    key_df = spark.createDataFrame([(k,) for k in keys], "key string")
+    key_df = local_frame(df.sparkSession, [(k,) for k in keys], "key string")
     return (
         key_df.join(F.broadcast(per_key), "key", "left")
         .select(

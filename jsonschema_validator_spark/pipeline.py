@@ -8,10 +8,17 @@ unions the verdict rows of:
 2. uniqueness          — image_id + phash, salted two-phase agg (skew-safe)
 3. referential         — fmt → dim_formats broadcast anti-join
 4. drift               — KS + PSI on w/h/phash histograms vs a baseline
-5. decode invariant    — Arrow-batched decode: payload decodes, dims match
+5. decode invariant    — Arrow-batched decode: payload decodes, dims match;
+   the decode pass also counts the rows it checked, so ``n_checked`` is
+   computed inside the plan
 
 ``stats()`` (null ratio / min / max / HLL distinct in ONE agg) profiles
 the same table on request; it emits no verdict rows.
+
+Building ``suite_verdicts()`` launches no Spark job: every family is one
+lazy plan, and the tiny literal tables (dim_formats, the uniqueness key
+list) are JVM local relations (``session.local_frame``), so the only
+Python stage of the executed suite is the decode itself.
 
 Scale design (10^12 rows / 1000 executors):
 - every family is a SEPARATE Spark job over the same scan, each single-pass;
@@ -32,6 +39,7 @@ checks the north rule adds on top (SURVEY.md §2.5).
 
 from __future__ import annotations
 
+import logging
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
@@ -53,6 +61,11 @@ IMAGES_SPEC = {
 }
 
 VERDICT_COLS = ["family", "rule_id", "n_checked", "n_failed", "pass"]
+
+# the columns the decode family reads (id, payload, declared dims)
+_DECODE_COLS = ("image_id", "bytes", "w", "h")
+
+_log = logging.getLogger(__name__)
 
 
 def _as_family(df: DataFrame, family: str) -> DataFrame:
@@ -105,10 +118,12 @@ class ImageValidationSuite:
         self.drift_columns = list(drift_columns)
         self.drift_range = drift_range
         self.n_buckets = n_buckets
-        # when the table's parquet files are known, the decode family reads
-        # them DIRECTLY in the Python tasks (pyarrow C++) instead of piping
-        # the bytes column through the JVM→Python Arrow channel — measured
-        # ~4× faster (see operators/multimodal.py direct-read note)
+        # source_path (the table's storage location) opts in to the direct
+        # read: the decode family reads df's own parquet files
+        # (df.inputFiles(), not a glob of the path) with pyarrow C++ in the
+        # Python tasks instead of piping the bytes column through the
+        # JVM→Python Arrow channel — measured ~4× faster (see the
+        # operators/multimodal.py direct-read note); see _decode_checks
         self.source_path = source_path
         # cache_metadata: the 5 metadata-only families each re-scan the
         # table; at bench scale the per-scan task overhead dominates, so
@@ -175,19 +190,22 @@ class ImageValidationSuite:
         )
 
     def decode_verdict(self) -> DataFrame:
-        """Decode + dims invariants collapsed to verdict counts (one Arrow
-        pass over bytes; violations themselves via `decode_violations`)."""
-        viol = self.decode_violations()
-        n = self._meta.count()
+        """Decode + dims invariants collapsed to verdict counts, in one
+        aggregate over one Arrow decode pass (violations themselves via
+        `decode_violations`). ``n_checked`` is the sum of the decode
+        pass's own count rows: it is counted inside the plan, so building
+        the verdict launches no Spark job and the count is exactly the
+        rows the decode saw."""
         rules = [("image:decode", "decode"), ("image:dims", "dims")]
         if self._bytes_required:
             rules.insert(0, ("required:$.bytes", "required"))
         # one tiny conditional agg (missing tags must still yield 0-rows)
-        agg = viol.agg(
+        agg = self._decode_checks().agg(
+            F.coalesce(F.sum("n_rows"), F.lit(0)).alias("_n"),
             *[
                 F.sum((F.col("tag") == t).cast("long")).alias(f"_c{i}")
                 for i, (_, t) in enumerate(rules)
-            ]
+            ],
         )
         entries = [
             F.struct(
@@ -196,24 +214,39 @@ class ImageValidationSuite:
             )
             for i, (rid, _) in enumerate(rules)
         ]
-        return agg.select(F.explode(F.array(*entries)).alias("_v")).select(
+        return agg.select("_n", F.explode(F.array(*entries)).alias("_v")).select(
             F.col("_v.rule_id").alias("rule_id"),
-            F.lit(n).alias("n_checked"),
+            F.col("_n").alias("n_checked"),
             F.col("_v.n_failed").alias("n_failed"),
             (F.col("_v.n_failed") == 0).alias("pass"),
         )
 
     def decode_violations(self) -> DataFrame:
+        from jsonschema_validator_spark.operators.multimodal import violation_rows
+
+        return violation_rows(self._decode_checks())
+
+    def _decode_checks(self) -> DataFrame:
+        """The decode pass (``multimodal.CHECKS_SCHEMA`` rows): direct
+        parquet reads of df's own files when ``source_path`` is set and df
+        is a plain column-pruned scan, else the Arrow channel."""
         from jsonschema_validator_spark.operators.multimodal import (
-            image_invariant_violations,
-            image_invariant_violations_files,
+            image_checks,
+            image_checks_files,
+            pruned_scan_files,
         )
 
         if self.source_path is not None:
-            return image_invariant_violations_files(
-                self.df.sparkSession, self.source_path
+            files = pruned_scan_files(self.df, _DECODE_COLS)
+            if files is not None:
+                return image_checks_files(self.df.sparkSession, files)
+            _log.warning(
+                "decode family: the DataFrame is not a plain column-pruned "
+                "parquet scan of %s; decoding it through the Arrow channel "
+                "instead of reading its files directly",
+                self.source_path,
             )
-        return image_invariant_violations(self.df)
+        return image_checks(self.df)
 
     # ---- the suite -------------------------------------------------------
 

@@ -8,8 +8,10 @@ sandbox's local[N].
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def build_session(
@@ -48,3 +50,26 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFrame:
+    """A tiny literal table (dimension rows, key lists, lineage, spec diffs)
+    as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(list)`` plans a ``Scan ExistingRDD`` over a
+    Python RDD, so every query that touches the table starts Python
+    workers for a handful of rows. Handing Spark a ``pyarrow.Table``
+    instead plans a ``LocalTableScan``: no Python stage, no job. Column
+    types come exactly from ``ddl`` (every column nullable, as with
+    ``createDataFrame(rows, ddl)``); ``rows`` may be empty.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    columns = list(zip(*rows)) if rows else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, to_arrow_schema(schema))],
+        names=schema.names,
+    )
+    return spark.createDataFrame(table, schema)

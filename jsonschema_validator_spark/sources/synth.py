@@ -179,7 +179,10 @@ def generate_spark(spark, n: int, seed: int = 42, start: int = 0, partitions: in
 
 def dim_formats(spark):
     """The dimension table for referential checks (FIXTURES.md §2)."""
-    return spark.createDataFrame(
+    from jsonschema_validator_spark.session import local_frame
+
+    return local_frame(
+        spark,
         [("png", 1 << 22, False), ("jpeg", 1 << 21, True), ("webp", 1 << 21, True)],
         "fmt string, max_bytes bigint, lossy boolean",
     )

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jsonschema_validator_spark.rules.types import _json_type_of_dtype
+from jsonschema_validator_spark.session import local_frame
 
 _INT_DTYPES = frozenset(
     {"tinyint", "smallint", "int", "bigint", "long", "short", "byte"}
@@ -397,9 +398,7 @@ def constraint_drift(
     """
     old = suggest_spec(df_old, columns, enum_max_distinct, widen_numeric, max_depth)
     new = suggest_spec(df_new, columns, enum_max_distinct, widen_numeric, max_depth)
-    return df_old.sparkSession.createDataFrame(
-        spec_diff(old, new), _DIFF_SCHEMA
-    )
+    return local_frame(df_old.sparkSession, spec_diff(old, new), _DIFF_SCHEMA)
 
 
 def spec_keyword_rows(spec: dict) -> list[tuple]:

@@ -133,6 +133,87 @@ def test_direct_read_decode_matches_channel(spark, tmp_path):
     assert len(a) > 0
 
 
+@pytest.fixture(scope="module")
+def images_dir(spark, tmp_path_factory):
+    p = str(tmp_path_factory.mktemp("suite") / "imgs")
+    synth.generate_spark(spark, 2000, seed=42, partitions=4).write.parquet(p)
+    return p
+
+
+def test_filtered_df_decode_checks_exactly_df(spark, images_dir, caplog):
+    """With source_path set, the decode family validates exactly the
+    DataFrame it is given: a filtered df is not a plain scan, so the
+    decode falls back to the Arrow channel (logged) and its verdicts and
+    violation rows describe the filtered rows only, not the whole
+    directory."""
+    import logging
+
+    from pyspark.sql import functions as F
+
+    from jsonschema_validator_spark.operators.multimodal import (
+        image_invariant_violations,
+    )
+
+    df = spark.read.parquet(images_dir).where(F.col("phash") % 3 != 0)
+    n = df.count()
+    suite = ImageValidationSuite(df, source_path=images_dir)
+    with caplog.at_level(logging.WARNING, logger="jsonschema_validator_spark.pipeline"):
+        got = sorted(
+            (r["image_id"], r["tag"], r["message"])
+            for r in suite.decode_violations().collect()
+        )
+    want = sorted(
+        (r["image_id"], r["tag"], r["message"])
+        for r in image_invariant_violations(df).collect()
+    )
+    assert got == want and got
+    assert "Arrow channel" in caplog.text
+    verdicts = {r["rule_id"]: r for r in suite.decode_verdict().collect()}
+    assert {v["n_checked"] for v in verdicts.values()} == {n}
+    assert verdicts["image:decode"]["n_failed"] == sum(t == "decode" for _, t, _ in want)
+    assert verdicts["image:dims"]["n_failed"] == sum(t == "dims" for _, t, _ in want)
+
+
+def test_pruned_scan_reads_its_own_files(spark, images_dir):
+    """Only a plain column-pruned parquet scan qualifies for the direct
+    read, and its units are the df's own files."""
+    from pyspark.sql import functions as F
+
+    from jsonschema_validator_spark.operators.multimodal import pruned_scan_files
+
+    cols = ("image_id", "bytes", "w", "h")
+    df = spark.read.parquet(images_dir)
+    files = pruned_scan_files(df, cols)
+    assert files == sorted(df.inputFiles()) and len(files) == 4
+    assert pruned_scan_files(df.select(*cols, "phash"), cols) == files
+    assert pruned_scan_files(df.where("w > 1"), cols) is None
+    assert pruned_scan_files(df.withColumn("w", F.col("w") + 1), cols) is None
+    assert pruned_scan_files(df.drop("bytes"), cols) is None
+    direct = ImageValidationSuite(df, source_path=images_dir)
+    counts = {r["rule_id"]: r["n_checked"] for r in direct.decode_verdict().collect()}
+    assert set(counts.values()) == {2000}
+
+
+@pytest.mark.parametrize("direct", [True, False], ids=["direct", "channel"])
+def test_suite_plan_build_launches_no_job(spark, images_dir, direct):
+    """Building the whole suite is lazy: no Spark job runs until the
+    verdicts are collected (the row count of the decode family is taken
+    inside the decode pass, not by an eager count())."""
+    df = spark.read.parquet(images_dir)
+    sc = spark.sparkContext
+    group = f"suite-build-{direct}"
+    sc.setJobGroup(group, "plan build")
+    try:
+        ImageValidationSuite(
+            df, dim_formats=synth.dim_formats(spark), baseline=df,
+            source_path=images_dir if direct else None, cache_metadata=True,
+        ).suite_verdicts()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.catalog.clearCache()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_iter_binary_rows_sliced_and_large_binary():
     """_iter_binary_rows must honor chunk.offset (sliced chunks) and int64
     offsets (large_binary); a wrong dtype raises instead of garbage."""

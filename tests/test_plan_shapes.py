@@ -439,3 +439,43 @@ def test_long_shape_unpivot_single_pass(spark):
     rows = out.collect()
     assert len(rows) == 4 * agg.count()
     assert {r["stat"] for r in rows} == {"m", "n", "s", "x"}
+
+
+# a physical operator that evaluates Python (mapIn*, *EvalPython, grouped
+# and windowed pandas/Arrow UDFs)
+_PYTHON_NODE = re.compile(r"\b\w*(?:InPandas|InArrow|EvalPython|WindowPython|AggregatePython)\w*\b")
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan of a collected DataFrame (AQE's final
+    plan, without the initial one printed beside it)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_image_suite_only_python_stage_is_the_decode(spark, tmp_path):
+    """The executed flagship suite (direct-read decode, metadata cache)
+    runs Python in exactly one operator, the decode: the tiny literal
+    tables are local relations (no ``Scan ExistingRDD`` over a Python
+    RDD) and the decode units come from ``spark.range`` (no round-robin
+    Exchange in front of the decode)."""
+    from jsonschema_validator_spark.pipeline import ImageValidationSuite
+    from jsonschema_validator_spark.sources import synth
+
+    p = str(tmp_path / "imgs")
+    synth.generate_spark(spark, 400, seed=42, partitions=2).write.parquet(p)
+    df = spark.read.parquet(p)
+    plan = ImageValidationSuite(
+        df, dim_formats=synth.dim_formats(spark), baseline=df,
+        source_path=p, cache_metadata=True,
+    ).suite_verdicts()
+    try:
+        assert len(plan.collect()) > 0
+        final = _final_plan(plan)
+    finally:
+        spark.catalog.clearCache()
+    assert "Scan ExistingRDD" not in final
+    assert "RoundRobinPartitioning" not in final
+    assert _PYTHON_NODE.findall(final) == ["MapInArrow"], final
