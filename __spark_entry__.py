@@ -1894,10 +1894,11 @@ def q_images_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal pipeline): channel means, grayscale std, brightness and
     gradient edge-energy per decoded image, Arrow-batched numpy — over the
     deterministic 1-in-8 id slice (500 images; the slice's residues dodge
-    every synth injection, so all selected rows decode). Late round 4 adds
-    the six curation quality metrics (Laplacian-variance sharpness,
-    histogram entropy, clip fractions, colorfulness, dynamic range —
-    multimodal.image_quality_metrics) computed in the SAME decode pass.
+    every synth injection, so all selected rows decode), plus the six
+    curation quality metrics (Laplacian-variance sharpness, histogram
+    entropy, clip fractions, colorfulness, dynamic range —
+    multimodal.image_quality_metrics) from the same decode, all in one
+    Arrow-batched mapInArrow.
     Oracle: the independent pandas/numpy re-implementation
     (oracle.feature_rows)."""
     from jsonschema_validator_spark.operators.multimodal import image_features
@@ -1910,7 +1911,7 @@ def q_images_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             == 0
         )
     )
-    return image_features(sel, include_quality=True).orderBy("image_id")
+    return image_features(sel).orderBy("image_id")
 
 
 _PHASH_PLANT_STEP = 200  # planted variant every 200th row, offset 9
@@ -1976,7 +1977,7 @@ def q_images_jpeg_decode_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL JPEG bitstream decode through the distributed plumbing: 12
     deterministic synth images are encoded as actual ITU-T T.81 baseline
     JPEGs (sources/jpeg.py, quality 98, 4:4:4), shipped as a binary
-    column, and decoded back INSIDE the Arrow-batched mapInPandas operator
+    column, and decoded back INSIDE the Arrow-batched mapInArrow operator
     (operators/multimodal.psnr_vs_reference → decode_image SOI dispatch →
     canonical-Huffman decode on executors). Gate: every decoded image
     matches its ground-truth pixels at ≥40 dB — the BASELINE.json lossy
@@ -2012,8 +2013,8 @@ def q_videos_frame_sample_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video decode end-to-end (round 4 — no injected decoder): 6
     deterministic MJPEG AVIs (sources/avi.py writer: hdrl/movi/idx1
     container around genuine T.81 JPEG frames, quality 98) ship as a
-    binary column; sample_video_frames' DEFAULT decoder walks the
-    container and Huffman-decodes the sampled frames on executors, PNG
+    binary column; sample_video_frames walks the container and
+    Huffman-decodes the sampled frames on executors (sources/avi.py), PNG
     re-encoding each. Gate: 6 videos × 3 sampled frames, true stream
     indices {0,4,8} (every_n=4 of 9 frames), and every sampled frame
     matches its ground-truth pixels at ≥40 dB through the full
@@ -2067,8 +2068,8 @@ def q_audio_features_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode end-to-end (round 4 — no injected decoder): 24
     deterministic WAV clips sweeping sample rate (8/16/22.05 kHz), sample
     format (s16/u8/s24/float32), amplitude, duration and channel count
-    ship as a binary column; audio_features' DEFAULT decoder parses the
-    RIFF/WAVE stream on executors (numpy-vectorized, mono mixdown) and
+    ship as a binary column; audio_features parses the RIFF/WAVE stream
+    on executors (sources/wav.py, numpy-vectorized, mono mixdown) and
     emits rms/peak/zero-crossing features. FULL VALUE PARITY (not a
     tolerance gate): the oracle is an independent struct-based WAV reader
     + the same feature formulas (oracle.audio_feature_rows) rendered as a

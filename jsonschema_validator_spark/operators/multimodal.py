@@ -1,15 +1,24 @@
-"""Multimodal payload checks: image decode over Arrow-batched pandas UDFs.
+"""Multimodal payload checks: decode over Arrow batches.
 
 BASELINE.json input_hint: "Image payload checks decode bytes in Arrow-batched
 UDFs with a per-row invariant of decoded-pixel allclose (PSNR≥40dB for
 lossy) and caption equality" — and "no per-row Python" means no row-at-a-time
-Python UDFs: decode runs inside ``mapInPandas``/``mapInArrow`` over Arrow
-batches; numpy does the pixel math vectorized per image.
+Python UDFs: every payload operator runs inside one ``mapInArrow`` over
+Arrow batches; numpy does the pixel math vectorized per image.
 
-The actual byte→pixel codecs live in sources/codecs.py (real PNG subset +
-a clearly-marked stub lossy codec, since the container has no image libs —
-the Spark-side plumbing here, schema/batching/partitioning, is real and
-tested).
+Two helpers own the Python (Arrow) boundary:
+- :func:`_check_images` — the image invariants, shared by the Arrow
+  channel (:func:`image_checks`) and the direct read
+  (:func:`image_checks_files`);
+- :func:`_map_payloads` — every other payload operator (profile, PSNR,
+  features/quality, resize, video frames, audio features) is a small
+  per-row function over a zero-copy payload slice.
+``caption_equality_violations`` has no payload and stays a vectorized
+pandas compare.
+
+The byte→pixel codecs live in sources/codecs.py (PNG subset, real T.81
+JPEG, legacy stub lossy codecs), sources/avi.py (MJPEG AVI) and
+sources/wav.py (RIFF/WAVE), all pure numpy.
 
 Scale notes:
 - batch size is bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``
@@ -21,7 +30,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
 from typing import Iterator, Optional, Sequence
 
 import numpy as np
@@ -29,6 +37,68 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+from jsonschema_validator_spark.session import arrow_rows
+
+
+def _iter_binary_rows(table, bytes_col):
+    """Yield (row_index, memoryview_or_None) over a pyarrow table column —
+    zero-copy slices of the value buffer. Nulls come from the validity
+    bitmap, so a chunk with a few null payloads (an expected violation
+    class) still serves every NON-null row zero-copy."""
+    idx = 0
+    for chunk in table.column(bytes_col).chunks:
+        if not pa.types.is_binary(chunk.type) and not pa.types.is_large_binary(
+            chunk.type
+        ):
+            raise TypeError(f"expected (large_)binary column, got {chunk.type}")
+        valid = (
+            chunk.is_valid().to_numpy(zero_copy_only=False)
+            if chunk.null_count
+            else None
+        )
+        bufs = chunk.buffers()
+        # offset dtype depends on the arrow type (binary=int32,
+        # large_binary=int64), and a sliced chunk's value offsets start
+        # at chunk.offset — index from there, not from 0
+        off_dtype = np.int64 if pa.types.is_large_binary(chunk.type) else np.int32
+        off = np.frombuffer(
+            bufs[1], dtype=off_dtype, count=chunk.offset + len(chunk) + 1
+        )[chunk.offset :]
+        # cast to unsigned so slices compare equal to bytes literals
+        # (pyarrow buffers expose signed 'b'-format memoryviews); an
+        # all-null/all-empty chunk may carry no value buffer at all
+        mv = memoryview(bufs[2]).cast("B") if bufs[2] is not None else memoryview(b"")
+        for i in range(len(chunk)):
+            if valid is not None and not valid[i]:
+                yield idx + i, None
+            else:
+                yield idx + i, mv[off[i] : off[i + 1]]
+        idx += len(chunk)
+
+
+def _map_payloads(df: DataFrame, cols: Sequence[str], ddl: str, per_row) -> DataFrame:
+    """Run ``per_row(key, payload, *extras)`` over ``df``'s ``cols`` (key,
+    binary payload, then extras) in one ``mapInArrow``. ``payload`` is a
+    zero-copy memoryview slice, or None for a null; each call returns zero
+    or more output tuples, and each input batch becomes one RecordBatch
+    typed exactly by ``ddl``."""
+    # parsed here on the driver: StructType.fromDDL needs the JVM
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+
+    def run(batches):
+        for b in batches:
+            t = pa.Table.from_batches([b])
+            keys, *extras = (t.column(i).to_pylist() for i in range(t.num_columns) if i != 1)
+            rows = []
+            for i, payload in _iter_binary_rows(t, 1):
+                rows.extend(per_row(keys[i], payload, *(e[i] for e in extras)))
+            yield arrow_rows(rows, schema)
+
+    return df.select(*cols).mapInArrow(run, ddl)
+
 
 DECODE_SCHEMA = (
     "image_id string, decode_ok boolean, dec_w int, dec_h int, "
@@ -46,47 +116,20 @@ def decode_profile(df: DataFrame, id_col: str = "image_id", bytes_col: str = "by
     """
     from jsonschema_validator_spark.sources.codecs import decode_image
 
-    sel = df.select(F.col(id_col).alias("image_id"), F.col(bytes_col).alias("bytes"))
+    def row(iid, data):
+        try:
+            px = decode_image(data)
+            h, w, _ = px.shape
+            # exact Python-int math: np.uint64 * python-int silently
+            # promotes to float64 on NumPy 1.x, losing low bits of the hash
+            # (and NumPy 2 computes exactly — the same image would checksum
+            # differently per env)
+            csum = int(px.astype(np.uint64).sum()) * 2654435761 % (1 << 63)
+        except Exception as exc:  # noqa: BLE001 - decode must never kill the job
+            return [(iid, False, None, None, None, str(exc)[:200])]
+        return [(iid, True, w, h, csum, None)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {
-                "image_id": b["image_id"],
-                "decode_ok": [],
-                "dec_w": [],
-                "dec_h": [],
-                "pixel_checksum": [],
-                "decode_error": [],
-            }
-            for data in b["bytes"]:
-                try:
-                    px = decode_image(bytes(data) if data is not None else None)
-                    h, w, _ = px.shape
-                    # exact Python-int math: np.uint64 * python-int
-                    # silently promotes to float64 on NumPy 1.x, losing
-                    # low bits of the hash (and NumPy 2 computes exactly
-                    # — the same image would checksum differently per env)
-                    csum = int(
-                        int(px.astype(np.uint64).sum()) * 2654435761 % (1 << 63)
-                    )
-                    out["decode_ok"].append(True)
-                    out["dec_w"].append(w)
-                    out["dec_h"].append(h)
-                    out["pixel_checksum"].append(csum)
-                    out["decode_error"].append(None)
-                except Exception as exc:  # noqa: BLE001 - decode must never kill the job
-                    out["decode_ok"].append(False)
-                    out["dec_w"].append(None)
-                    out["dec_h"].append(None)
-                    out["pixel_checksum"].append(None)
-                    out["decode_error"].append(str(exc)[:200])
-            res = pd.DataFrame(out)
-            res["dec_w"] = res["dec_w"].astype("Int32")
-            res["dec_h"] = res["dec_h"].astype("Int32")
-            res["pixel_checksum"] = res["pixel_checksum"].astype("Int64")
-            yield res
-
-    return sel.mapInPandas(run, schema=DECODE_SCHEMA)
+    return _map_payloads(df, [id_col, bytes_col], DECODE_SCHEMA, row)
 
 
 # Both decode paths emit the same rows: one violation row per bad payload
@@ -218,47 +261,6 @@ def image_invariant_violations(
 # decode.
 
 
-def _iter_binary_rows(table, bytes_col: str):
-    """Yield (row_index, memoryview_or_None) over a pyarrow table column —
-    zero-copy slices of the value buffer. Nulls come from the validity
-    bitmap, so a chunk with a few null payloads (an expected violation
-    class) still serves every NON-null row zero-copy — the earlier form
-    degraded the whole chunk to per-row ``as_py()`` copies on the first
-    null, forfeiting the direct-read path's measured advantage exactly on
-    the corpora that need its violation reporting."""
-    import pyarrow as pa
-
-    idx = 0
-    for chunk in table.column(bytes_col).chunks:
-        if not pa.types.is_binary(chunk.type) and not pa.types.is_large_binary(
-            chunk.type
-        ):
-            raise TypeError(f"expected (large_)binary column, got {chunk.type}")
-        valid = (
-            chunk.is_valid().to_numpy(zero_copy_only=False)
-            if chunk.null_count
-            else None
-        )
-        bufs = chunk.buffers()
-        # offset dtype depends on the arrow type (binary=int32,
-        # large_binary=int64), and a sliced chunk's value offsets start
-        # at chunk.offset — index from there, not from 0
-        off_dtype = np.int64 if pa.types.is_large_binary(chunk.type) else np.int32
-        off = np.frombuffer(
-            bufs[1], dtype=off_dtype, count=chunk.offset + len(chunk) + 1
-        )[chunk.offset :]
-        # cast to unsigned so slices compare equal to bytes literals
-        # (pyarrow buffers expose signed 'b'-format memoryviews); an
-        # all-null/all-empty chunk may carry no value buffer at all
-        mv = memoryview(bufs[2]).cast("B") if bufs[2] is not None else memoryview(b"")
-        for i in range(len(chunk)):
-            if valid is not None and not valid[i]:
-                yield idx + i, None
-            else:
-                yield idx + i, mv[off[i] : off[i + 1]]
-        idx += len(chunk)
-
-
 def pruned_scan_files(df: DataFrame, columns: Sequence[str]) -> Optional[list]:
     """``df.inputFiles()`` when ``df`` is exactly its parquet files' rows —
     its optimized plan is a parquet scan, at most under a projection of
@@ -314,28 +316,6 @@ def image_checks_files(
 
     return spark.range(0, len(units), 1, max(len(units), 1)).mapInArrow(
         run, schema=CHECKS_SCHEMA
-    )
-
-
-def image_invariant_violations_files(
-    spark,
-    path: str,
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
-    w_col: str = "w",
-    h_col: str = "h",
-    files_per_task: int = 1,
-) -> DataFrame:
-    """Same output as :func:`image_invariant_violations`, but each Spark
-    task reads the ``*.parquet`` files under ``path`` directly with
-    pyarrow (see the direct-read note above)."""
-    import glob
-
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    if not files:
-        raise ValueError(f"no parquet files under {path}")
-    return violation_rows(
-        image_checks_files(spark, files, id_col, bytes_col, w_col, h_col, files_per_task)
     )
 
 
@@ -406,7 +386,8 @@ def psnr_vs_reference(
     pixels for a row (tests use the synth generator's pure row function).
     Output: ``image_id string, psnr double`` — the ≥40 dB / allclose
     invariant check from BASELINE.json (caption equality is the separate
-    :func:`caption_equality_violations` operator).
+    :func:`caption_equality_violations` operator). A lossless match scores
+    1e9, a shape mismatch -1, and a missing or undecodable payload null.
 
     ``index_col`` is REQUIRED: without a per-row index the Arrow batch
     offsets would restart at 0 per partition and rows would be compared
@@ -420,111 +401,77 @@ def psnr_vs_reference(
         )
     from jsonschema_validator_spark.sources.codecs import decode_image, psnr
 
-    cols = [F.col(id_col).alias("image_id"), F.col(bytes_col).alias("bytes")]
-    if index_col:
-        cols.append(F.col(index_col).alias("_idx"))
-    sel = df.select(*cols)
+    def row(iid, data, idx):
+        try:
+            px = decode_image(data)
+            ref = reference_pixels_fn(int(idx))
+        except ValueError:
+            # null, not NaN: mapInArrow keeps a NaN as a value
+            return [(iid, None)]
+        if ref.shape != px.shape:
+            return [(iid, -1.0)]
+        p = psnr(ref, px)
+        return [(iid, 1e9 if p == float("inf") else p)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            # decode + PSNR are inherently per-image; iterate columns via
-            # zip (no per-cell .iloc), everything inside is numpy-vectorized
-            idxs = b["_idx"].astype("int64").to_numpy()
-            vals = []
-            for data, idx in zip(b["bytes"], idxs):
-                if data is None:
-                    # bytes(None) raises TypeError, which would escape the
-                    # except below and kill the task; a missing payload is
-                    # just an undecodable row
-                    vals.append(float("nan"))
-                    continue
-                try:
-                    px = decode_image(bytes(data))
-                    ref = reference_pixels_fn(int(idx))
-                    if ref.shape != px.shape:
-                        vals.append(-1.0)
-                    else:
-                        p = psnr(ref, px)
-                        vals.append(1e9 if p == float("inf") else p)
-                except ValueError:
-                    vals.append(float("nan"))
-            yield pd.DataFrame({"image_id": b["image_id"], "psnr": vals})
+    return _map_payloads(
+        df, [id_col, bytes_col, index_col], "image_id string, psnr double", row
+    )
 
-    return sel.mapInPandas(run, schema="image_id string, psnr double")
+
+_FEATURES_SCHEMA = (
+    "image_id string, f_w int, f_h int, mean_r double, mean_g double, "
+    "mean_b double, std_gray double, brightness double, edge_energy double, "
+    "sharpness double, entropy double, clip_low_frac double, "
+    "clip_high_frac double, colorfulness double, dynamic_range double"
+)
+_QUALITY_COLS = [
+    "sharpness", "entropy", "clip_low_frac", "clip_high_frac",
+    "colorfulness", "dynamic_range",
+]
 
 
 def image_features(
-    df: DataFrame,
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
-    include_quality: bool = False,
+    df: DataFrame, id_col: str = "image_id", bytes_col: str = "bytes"
 ) -> DataFrame:
     """Feature extraction over decoded pixels (the feature-extract stage of
     the brief's multimodal pipeline): per image, channel means, grayscale
     std, brightness and a gradient-energy edge score — all numpy over the
-    Arrow batch, values rounded to 1e-6 for cross-engine comparability.
-    Undecodable payloads are dropped (decode violations are
-    :func:`image_invariant_violations`'s job, not this operator's).
+    Arrow batch, values rounded to 1e-6 for cross-engine comparability —
+    followed by the six :func:`image_quality_metrics` columns from the same
+    decode. Null and undecodable payloads are dropped (decode violations
+    are :func:`image_invariant_violations`'s job, not this operator's).
 
     Output: ``image_id, f_w, f_h, mean_r, mean_g, mean_b, std_gray,
-    brightness, edge_energy``. ``include_quality=True`` appends the six
-    :func:`image_quality_metrics` columns computed in the SAME decode
-    pass (one decode per image, never two) — identical values to the
-    standalone operator (shared ``_quality_stats``).
+    brightness, edge_energy, sharpness, entropy, clip_low_frac,
+    clip_high_frac, colorfulness, dynamic_range``.
     """
     from jsonschema_validator_spark.sources.codecs import decode_image
 
-    sel = df.select(F.col(id_col).alias("image_id"), F.col(bytes_col).alias("bytes"))
-    base_cols = [
-        "image_id", "f_w", "f_h", "mean_r", "mean_g", "mean_b",
-        "std_gray", "brightness", "edge_energy",
-    ]
-    quality_cols = [
-        "sharpness", "entropy", "clip_low_frac", "clip_high_frac",
-        "colorfulness", "dynamic_range",
-    ]
-    cols = base_cols + (quality_cols if include_quality else [])
-    schema = (
-        "image_id string, f_w int, f_h int, mean_r double, mean_g double, "
-        "mean_b double, std_gray double, brightness double, edge_energy double"
-    )
-    if include_quality:
-        schema += (
-            ", sharpness double, entropy double, clip_low_frac double, "
-            "clip_high_frac double, colorfulness double, dynamic_range double"
-        )
+    def row(iid, data):
+        try:
+            px = decode_image(data).astype(np.float64)
+        except ValueError:
+            return []
+        h, w = px.shape[:2]
+        gray = px.mean(axis=2)
+        gx = np.abs(np.diff(gray, axis=1)).mean() if w > 1 else 0.0
+        gy = np.abs(np.diff(gray, axis=0)).mean() if h > 1 else 0.0
+        return [
+            (
+                iid,
+                int(w),
+                int(h),
+                round(float(px[:, :, 0].mean()), 6),
+                round(float(px[:, :, 1].mean()), 6),
+                round(float(px[:, :, 2].mean()), 6),
+                round(float(gray.std()), 6),
+                round(float(gray.mean() / 255.0), 6),
+                round(float(gx + gy), 6),
+                *_quality_stats(px, gray),
+            )
+        ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data in zip(b["image_id"], b["bytes"]):
-                if data is None:  # bytes(None) is TypeError, not ValueError
-                    continue
-                try:
-                    px = decode_image(bytes(data)).astype(np.float64)
-                except ValueError:
-                    continue
-                h, w = px.shape[:2]
-                gray = px.mean(axis=2)
-                gx = np.abs(np.diff(gray, axis=1)).mean() if w > 1 else 0.0
-                gy = np.abs(np.diff(gray, axis=0)).mean() if h > 1 else 0.0
-                row = (
-                    iid,
-                    int(w),
-                    int(h),
-                    round(float(px[:, :, 0].mean()), 6),
-                    round(float(px[:, :, 1].mean()), 6),
-                    round(float(px[:, :, 2].mean()), 6),
-                    round(float(gray.std()), 6),
-                    round(float(gray.mean() / 255.0), 6),
-                    round(float(gx + gy), 6),
-                )
-                if include_quality:
-                    row = row + _quality_stats(px, gray)
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return sel.mapInPandas(run, schema=schema)
+    return _map_payloads(df, [id_col, bytes_col], _FEATURES_SCHEMA, row)
 
 
 def resize_images(
@@ -536,59 +483,24 @@ def resize_images(
 ) -> DataFrame:
     """Nearest-neighbor resize, re-encoded as PNG (the resize stage):
     ``image_id, bytes, w, h``. Real resampling (integer index sampling —
-    pure numpy), real PNG output any reader can decode. Undecodable
-    payloads are dropped.
+    pure numpy), real PNG output any reader can decode. Null and
+    undecodable payloads are dropped.
     """
     from jsonschema_validator_spark.sources.codecs import decode_image, encode_png
 
-    sel = df.select(F.col(id_col).alias("image_id"), F.col(bytes_col).alias("bytes"))
+    def row(iid, data):
+        try:
+            px = decode_image(data)
+        except ValueError:
+            return []
+        h, w = px.shape[:2]
+        ys = (np.arange(out_h) * h) // out_h
+        xs = (np.arange(out_w) * w) // out_w
+        return [(iid, encode_png(px[ys][:, xs]), out_w, out_h)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, blobs = [], []
-            for iid, data in zip(b["image_id"], b["bytes"]):
-                if data is None:  # bytes(None) is TypeError, not ValueError
-                    continue
-                try:
-                    px = decode_image(bytes(data))
-                except ValueError:
-                    continue
-                h, w = px.shape[:2]
-                ys = (np.arange(out_h) * h) // out_h
-                xs = (np.arange(out_w) * w) // out_w
-                ids.append(iid)
-                blobs.append(bytearray(encode_png(px[ys][:, xs])))
-            yield pd.DataFrame(
-                {
-                    "image_id": ids,
-                    "bytes": blobs,
-                    "w": [out_w] * len(ids),
-                    "h": [out_h] * len(ids),
-                }
-            )
-
-    return sel.mapInPandas(run, schema="image_id string, bytes binary, w int, h int")
-
-
-def fake_video_decoder(data: bytes, n_frames: int = 32) -> list:
-    """Deterministic STAND-IN video decoder for formats this runtime can't
-    parse: derives ``n_frames`` 16x16 RGB frames purely from the payload
-    bytes (md5-seeded gradients). Kept for testing the plumbing against
-    arbitrary payloads — real ``.avi`` MJPEG bytes need no injection at
-    all (``decoder=None`` uses :func:`sources.avi.decode_avi_frames`)."""
-    import hashlib
-
-    frames = []
-    for k in range(n_frames):
-        seed = hashlib.md5(data[:64] + bytes([k])).digest()
-        base = np.frombuffer(seed[:3], dtype=np.uint8).astype(np.int64)
-        yy, xx = np.mgrid[0:16, 0:16]
-        px = np.stack(
-            [(base[c] + xx * (c + 1) + yy * (3 - c)) % 256 for c in range(3)],
-            axis=-1,
-        ).astype(np.uint8)
-        frames.append(px)
-    return frames
+    return _map_payloads(
+        df, [id_col, bytes_col], "image_id string, bytes binary, w int, h int", row
+    )
 
 
 def sample_video_frames(
@@ -597,140 +509,88 @@ def sample_video_frames(
     max_frames: int = 4,
     id_col: str = "video_id",
     bytes_col: str = "bytes",
-    decoder=None,
 ) -> DataFrame:
     """Video frame sampling (the frame-sample stage): ``video_id,
     frame_idx, frame_png binary, w, h`` — every ``every_n``-th decoded
     frame (``frame_idx`` is the true stream index), at most ``max_frames``
     per video, each sampled frame re-encoded as PNG.
 
-    ``decoder=None`` (the default) decodes REAL Motion-JPEG AVI bytes via
-    the pure-numpy container walk + T.81 JPEG decoder in
-    :mod:`sources.avi` — end-to-end in this sandbox, no libav/ffmpeg.
-    Other formats (H.264, VP9, ...) still need an injected
-    ``(bytes) -> list[ndarray]`` callable; unrecognized bytes raise
+    Decodes Motion-JPEG AVI bytes via the pure-numpy container walk +
+    T.81 JPEG decoder in :mod:`sources.avi` — no libav/ffmpeg. Null
+    payloads are dropped; any other bytes (H.264, VP9, ...) raise
     ``ValueError`` inside the task (quarantine upstream with
     :func:`decode_profile`-style checks if the corpus is mixed).
     """
     from jsonschema_validator_spark.sources.avi import decode_avi_frames
     from jsonschema_validator_spark.sources.codecs import encode_png
 
-    decode = decoder if decoder is not None else decode_avi_frames
-    sel = df.select(F.col(id_col).alias("video_id"), F.col(bytes_col).alias("bytes"))
-    schema = "video_id string, frame_idx int, frame_png binary, w int, h int"
+    def row(vid, data):
+        if data is None:
+            return []
+        frames = decode_avi_frames(data)
+        return [
+            (vid, idx, encode_png(frames[idx]), frames[idx].shape[1], frames[idx].shape[0])
+            for idx in range(0, len(frames), every_n)[:max_frames]
+        ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for vid, data in zip(b["video_id"], b["bytes"]):
-                frames = decode(bytes(data))
-                for idx in list(range(0, len(frames), every_n))[:max_frames]:
-                    px = frames[idx]
-                    rows.append(
-                        (
-                            vid,
-                            idx,
-                            bytearray(encode_png(px)),
-                            int(px.shape[1]),
-                            int(px.shape[0]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["video_id", "frame_idx", "frame_png", "w", "h"]
-            )
-
-    return sel.mapInPandas(run, schema=schema)
-
-
-def fake_audio_decoder(data: bytes, sample_rate: int = 16000):
-    """Deterministic STAND-IN audio decoder for formats this runtime can't
-    parse: derives a 1-second PCM waveform purely from the payload bytes
-    (md5-seeded sinusoid mix), returning ``(float32 1-D wave, rate)`` —
-    float32 like a real narrow-PCM decode; ``audio_features`` widens to
-    float64 for the reductions.
-    Kept for testing the plumbing against arbitrary payloads — real
-    ``.wav`` bytes need no injection (``decoder=None`` uses
-    :func:`sources.wav.decode_wav_mono`)."""
-    import hashlib
-
-    seed = hashlib.md5(data[:64]).digest()
-    f0 = 55.0 * (1 + seed[0] % 32)  # 55..1760 Hz
-    amp = 0.2 + (seed[1] % 128) / 256.0
-    t = np.arange(sample_rate, dtype=np.float64) / sample_rate
-    wave = amp * np.sin(2 * np.pi * f0 * t) + 0.05 * np.sin(
-        2 * np.pi * 3 * f0 * t
+    return _map_payloads(
+        df,
+        [id_col, bytes_col],
+        "video_id string, frame_idx int, frame_png binary, w int, h int",
+        row,
     )
-    return wave.astype(np.float32), sample_rate
 
 
 def audio_features(
-    df: DataFrame,
-    id_col: str = "audio_id",
-    bytes_col: str = "bytes",
-    decoder=None,
+    df: DataFrame, id_col: str = "audio_id", bytes_col: str = "bytes"
 ) -> DataFrame:
     """Audio feature extraction (the audio leg of the brief's multimodal
     triple): ``audio_id, sample_rate, n_samples, duration_sec, rms, peak,
     zero_crossing_rate`` — numpy over decoded PCM inside Arrow batches.
 
-    ``decoder=None`` (the default) decodes REAL RIFF/WAVE bytes via the
-    pure-numpy parser in :mod:`sources.wav` (PCM u8/s16/s24/s32 + IEEE
-    float, any channel count, mixed to mono) — end-to-end in this
-    sandbox. Compressed formats (mp3, opus, ...) still need an injected
-    ``(bytes) -> (1-D float array, rate)`` callable; unrecognized bytes
-    raise ``ValueError`` inside the task.
+    Decodes RIFF/WAVE bytes via the pure-numpy parser in
+    :mod:`sources.wav` (PCM u8/s16/s24/s32 + IEEE float, any channel
+    count, mixed to mono). Null payloads are dropped; any other bytes
+    (mp3, opus, ...) raise ``ValueError`` inside the task.
     """
     from jsonschema_validator_spark.sources.wav import decode_wav_mono
 
-    decode = decoder if decoder is not None else decode_wav_mono
-    sel = df.select(F.col(id_col).alias("audio_id"), F.col(bytes_col).alias("bytes"))
-    schema = (
-        "audio_id string, sample_rate int, n_samples long, duration_sec double, "
-        "rms double, peak double, zero_crossing_rate double"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for aid, data in zip(b["audio_id"], b["bytes"]):
-                pcm, sample_rate = decode(bytes(data))
-                pcm = np.asarray(pcm, dtype=np.float64)
-                n = pcm.size
-                zc = (
-                    float((np.signbit(pcm[1:]) != np.signbit(pcm[:-1])).mean())
-                    if n > 1
-                    else 0.0
-                )
-                rows.append(
-                    (
-                        aid,
-                        int(sample_rate),
-                        int(n),
-                        round(n / sample_rate, 6),
-                        # n == 0 (valid WAV, empty data chunk): mean of an
-                        # empty array is NaN — guard like peak/zc so the
-                        # row stays finite and aggregable
-                        round(float(np.sqrt(np.mean(pcm**2))) if n else 0.0, 6),
-                        round(float(np.abs(pcm).max()) if n else 0.0, 6),
-                        round(zc, 6),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "audio_id", "sample_rate", "n_samples", "duration_sec",
-                    "rms", "peak", "zero_crossing_rate",
-                ],
+    def row(aid, data):
+        if data is None:
+            return []
+        pcm, sample_rate = decode_wav_mono(data)
+        pcm = np.asarray(pcm, dtype=np.float64)
+        n = pcm.size
+        zc = float((np.signbit(pcm[1:]) != np.signbit(pcm[:-1])).mean()) if n > 1 else 0.0
+        return [
+            (
+                aid,
+                int(sample_rate),
+                int(n),
+                round(n / sample_rate, 6),
+                # n == 0 (valid WAV, empty data chunk): mean of an empty
+                # array is NaN — guard like peak/zc so the row stays finite
+                # and aggregable
+                round(float(np.sqrt(np.mean(pcm**2))) if n else 0.0, 6),
+                round(float(np.abs(pcm).max()) if n else 0.0, 6),
+                round(zc, 6),
             )
+        ]
 
-    return sel.mapInPandas(run, schema=schema)
+    return _map_payloads(
+        df,
+        [id_col, bytes_col],
+        "audio_id string, sample_rate int, n_samples long, duration_sec double, "
+        "rms double, peak double, zero_crossing_rate double",
+        row,
+    )
 
 
 def _quality_stats(px: np.ndarray, gray: np.ndarray) -> tuple:
     """(sharpness, entropy, clip_low, clip_high, colorfulness,
-    dynamic_range) for float64 pixels — shared by image_quality_metrics
-    and image_features(include_quality=True) so both emit bit-identical
-    values (the oracle mirrors this exact operation order)."""
+    dynamic_range) for float64 pixels — computed in image_features'
+    decode, which image_quality_metrics projects (the oracle mirrors this
+    exact operation order)."""
     h, w = gray.shape
     if h >= 3 and w >= 3:
         lap = (
@@ -783,42 +643,11 @@ def image_quality_metrics(
       the rg/yb opponent axes); 0 for pure grayscale content.
     - ``dynamic_range``: (max - min) of the grayscale, 0..255.
 
-    Undecodable payloads are dropped (decode violations are
-    :func:`image_invariant_violations`'s job). All numpy-vectorized per
-    image inside Arrow-batched mapInPandas — a pure map stage with no
-    shuffle at any scale; values rounded to 1e-6 for cross-engine
-    comparability.
+    A projection of :func:`image_features` (one decode pass, the same
+    values): null and undecodable payloads are dropped, a pure map stage
+    with no shuffle at any scale.
     """
-    from jsonschema_validator_spark.sources.codecs import decode_image
-
-    sel = df.select(F.col(id_col).alias("image_id"), F.col(bytes_col).alias("bytes"))
-    schema = (
-        "image_id string, sharpness double, entropy double, "
-        "clip_low_frac double, clip_high_frac double, colorfulness double, "
-        "dynamic_range double"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data in zip(b["image_id"], b["bytes"]):
-                if data is None:  # bytes(None) is TypeError, not ValueError
-                    continue
-                try:
-                    px = decode_image(bytes(data)).astype(np.float64)
-                except ValueError:
-                    continue
-                gray = px.mean(axis=2)
-                rows.append((iid, *_quality_stats(px, gray)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "sharpness", "entropy", "clip_low_frac",
-                    "clip_high_frac", "colorfulness", "dynamic_range",
-                ],
-            )
-
-    return sel.mapInPandas(run, schema=schema)
+    return image_features(df, id_col, bytes_col).select("image_id", *_QUALITY_COLS)
 
 
 def image_quality_gate(

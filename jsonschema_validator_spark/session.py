@@ -52,6 +52,19 @@ def build_session(
     return builder.getOrCreate()
 
 
+def arrow_rows(rows: Sequence[tuple], schema):
+    """``rows`` as one ``pyarrow.RecordBatch`` typed exactly by ``schema``
+    (nulls kept, ``rows`` may be empty). Pure pyarrow, so it also runs
+    inside Python workers."""
+    import pyarrow as pa
+
+    columns = list(zip(*rows)) if rows else [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, schema)],
+        schema=schema,
+    )
+
+
 def local_frame(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFrame:
     """A tiny literal table (dimension rows, key lists, lineage, spec diffs)
     as a JVM ``LocalRelation``.
@@ -67,9 +80,5 @@ def local_frame(spark: SparkSession, rows: Sequence[tuple], ddl: str) -> DataFra
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = StructType.fromDDL(ddl)
-    columns = list(zip(*rows)) if rows else [()] * len(schema)
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(columns, to_arrow_schema(schema))],
-        names=schema.names,
-    )
-    return spark.createDataFrame(table, schema)
+    batch = arrow_rows(rows, to_arrow_schema(schema))
+    return spark.createDataFrame(pa.Table.from_batches([batch]), schema)

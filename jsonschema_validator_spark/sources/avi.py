@@ -4,10 +4,9 @@ struct/numpy and each frame payload is a genuine ITU-T T.81 baseline JPEG
 handled by :mod:`jsonschema_validator_spark.sources.jpeg` (from-scratch
 encoder + decoder, no libav/ffmpeg needed).
 
-Closes the round-3 gap where :func:`~jsonschema_validator_spark.operators.
-multimodal.sample_video_frames` required an injected decoder:
-``decoder=None`` now routes genuine ``.avi`` MJPEG bytes through
-:func:`decode_avi_frames` on executors.
+:func:`~jsonschema_validator_spark.operators.multimodal.sample_video_frames`
+decodes its payloads with :func:`decode_avi_frames` on executors (no
+injected decoder); the reader takes ``bytes`` or a zero-copy memoryview.
 
 Writer emits the minimal standard layout mainstream players accept:
 ``RIFF('AVI ' LIST('hdrl' avih LIST('strl' strh strf)) LIST('movi'
@@ -106,7 +105,7 @@ def _walk_chunks(data: bytes, pos: int, end: int):
         cid = data[pos : pos + 4]
         (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
         if pos + 8 + size > end:
-            raise ValueError(f"truncated AVI chunk {cid!r}")
+            raise ValueError(f"truncated AVI chunk {bytes(cid)!r}")
         yield cid, pos + 8, size
         pos += 8 + size + (size % 2)
 

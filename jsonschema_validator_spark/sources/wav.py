@@ -2,11 +2,11 @@
 multimodal triple, real end-to-end in this sandbox (WAV needs no external
 codec library, unlike compressed audio).
 
-Closes the round-3 gap where :func:`~jsonschema_validator_spark.operators.
-multimodal.audio_features` required an injected decoder: ``decoder=None``
-now routes genuine ``.wav`` bytes through :func:`decode_wav` on executors
-(numpy-vectorized inside Arrow batches — the sample loop is a single
-``frombuffer``/astype, never per-sample Python).
+:func:`~jsonschema_validator_spark.operators.multimodal.audio_features`
+decodes its payloads with :func:`decode_wav` on executors (no injected
+decoder; ``bytes`` or a zero-copy memoryview), numpy-vectorized inside
+Arrow batches — the sample loop is a single ``frombuffer``/astype, never
+per-sample Python.
 
 Supported: PCM u8 / s16 / s24 / s32 (WAVE_FORMAT_PCM, wFormatTag=1) and
 IEEE float32/float64 (WAVE_FORMAT_IEEE_FLOAT, wFormatTag=3), any channel
@@ -100,7 +100,7 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
         (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
         body = data[pos + 8 : pos + 8 + size]
         if len(body) < size:
-            raise ValueError(f"truncated WAV chunk {cid!r}")
+            raise ValueError(f"truncated WAV chunk {bytes(cid)!r}")
         if cid == b"fmt ":
             if size < 16:
                 raise ValueError("fmt chunk too short")
@@ -146,7 +146,7 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
 
 def decode_wav_mono(data: bytes) -> tuple[np.ndarray, int]:
     """WAV bytes → ``(mono float64 1-D waveform, sample_rate)`` — channel
-    mean, the shape :func:`audio_features`' built-in decoder feeds numpy."""
+    mean, the shape :func:`audio_features` feeds numpy."""
     wave, rate = decode_wav(data)
     return wave.mean(axis=1), rate
 

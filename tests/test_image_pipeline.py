@@ -112,22 +112,26 @@ def test_suite_shape(suite):
 
 def test_direct_read_decode_matches_channel(spark, tmp_path):
     """The direct-parquet-read decode (scale path) must emit EXACTLY the
-    violations of the Arrow-channel version."""
+    violations of the Arrow-channel version on the same DataFrame."""
     from jsonschema_validator_spark.operators.multimodal import (
+        image_checks_files,
         image_invariant_violations,
-        image_invariant_violations_files,
+        pruned_scan_files,
+        violation_rows,
     )
 
     p = str(tmp_path / "imgs")
     synth.generate_spark(spark, 2000, seed=42, partitions=4).write.parquet(p)
     df = spark.read.parquet(p)
+    files = pruned_scan_files(df, ["image_id", "bytes", "w", "h"])
+    assert files
     a = sorted(
         (r["image_id"], r["tag"], r["message"])
         for r in image_invariant_violations(df).collect()
     )
     b = sorted(
         (r["image_id"], r["tag"], r["message"])
-        for r in image_invariant_violations_files(spark, p).collect()
+        for r in violation_rows(image_checks_files(spark, files)).collect()
     )
     assert a == b
     assert len(a) > 0

@@ -16,6 +16,7 @@ from jsonschema_validator_spark.operators.multimodal import (
     image_quality_metrics,
 )
 from jsonschema_validator_spark.sources.codecs import encode_png
+from tests.test_plan_shapes import _PYTHON_NODE
 
 
 def _df(spark, images):
@@ -129,6 +130,6 @@ class TestGate:
         df = _df(spark, {"a": _flat(1)})
         plan = image_quality_gate(df)._jdf.queryExecution().optimizedPlan().toString()
         # flags are Column algebra over ONE metrics projection: exactly one
-        # Python-worker stage, no join
-        assert plan.count("MapInPandas") == 1
+        # Python node (the shared payload map), no join
+        assert _PYTHON_NODE.findall(plan) == ["MapInArrow"], plan
         assert "Join" not in plan

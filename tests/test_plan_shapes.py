@@ -8,6 +8,8 @@ import contextlib
 import io
 import re
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -478,4 +480,50 @@ def test_image_suite_only_python_stage_is_the_decode(spark, tmp_path):
         spark.catalog.clearCache()
     assert "Scan ExistingRDD" not in final
     assert "RoundRobinPartitioning" not in final
+    assert _PYTHON_NODE.findall(final) == ["MapInArrow"], final
+
+
+_GRAY = np.full((8, 8, 3), 90, np.uint8)
+
+
+def _payload_frame(spark, kind: str):
+    """One valid payload of ``kind`` as a local relation (no Python scan)."""
+    from jsonschema_validator_spark.session import local_frame
+    from jsonschema_validator_spark.sources import synth
+    from jsonschema_validator_spark.sources.codecs import encode_png
+
+    if kind == "video":
+        return local_frame(
+            spark, synth.make_video_corpus(1, 2), "video_id string, bytes binary"
+        )
+    if kind == "audio":
+        return local_frame(spark, synth.make_audio_corpus(1), "audio_id string, bytes binary")
+    return local_frame(spark, [("a", encode_png(_GRAY), 0)], "image_id string, bytes binary, idx int")
+
+
+_PAYLOAD_OPERATORS = {
+    "decode_profile": ("image", lambda m, df: m.decode_profile(df)),
+    "psnr_vs_reference": (
+        "image",
+        lambda m, df: m.psnr_vs_reference(df, lambda i: _GRAY, index_col="idx"),
+    ),
+    "image_features": ("image", lambda m, df: m.image_features(df)),
+    "resize_images": ("image", lambda m, df: m.resize_images(df, 4, 4)),
+    "sample_video_frames": ("video", lambda m, df: m.sample_video_frames(df)),
+    "audio_features": ("audio", lambda m, df: m.audio_features(df)),
+    "image_quality_gate": ("image", lambda m, df: m.image_quality_gate(df)),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PAYLOAD_OPERATORS))
+def test_payload_operator_single_arrow_node(spark, name):
+    """Every payload operator runs Python in exactly one node, a
+    ``MapInArrow`` (the shared payload map), and the gate adds only Column
+    algebra on top of its metrics."""
+    from jsonschema_validator_spark.operators import multimodal
+
+    kind, build = _PAYLOAD_OPERATORS[name]
+    out = build(multimodal, _payload_frame(spark, kind))
+    out.collect()
+    final = _final_plan(out)
     assert _PYTHON_NODE.findall(final) == ["MapInArrow"], final

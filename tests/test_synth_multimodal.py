@@ -151,6 +151,35 @@ def test_psnr_vs_reference_invariant(spark):
     assert res["psnr"].isna().sum() == len(res[res["psnr"].isna()])
 
 
+def test_psnr_missing_or_undecodable_is_null_not_nan(spark):
+    """A missing or undecodable payload scores SQL NULL, never NaN (a NaN
+    would pass ``isNotNull`` and poison ``min``/``avg``)."""
+    from pyspark.sql import functions as F
+
+    from jsonschema_validator_spark.operators.multimodal import psnr_vs_reference
+
+    px = np.full((8, 8, 3), 77, np.uint8)
+    df = spark.createDataFrame(
+        [
+            ("ok", bytearray(encode_png(px)), 0),
+            ("gone", None, 1),
+            ("broken", bytearray(b"\x89PNG garbage bytes"), 2),
+        ],
+        "image_id string, bytes binary, idx int",
+    )
+    out = psnr_vs_reference(df, lambda i: px, index_col="idx")
+    got = {
+        r["image_id"]: (r["is_null"], r["is_nan"])
+        for r in out.select(
+            "image_id",
+            F.col("psnr").isNull().alias("is_null"),
+            F.isnan("psnr").alias("is_nan"),
+        ).collect()
+    }
+    assert got == {"ok": (False, False), "gone": (True, False), "broken": (True, False)}
+    assert out.where("psnr IS NULL").count() == 2
+
+
 def test_validation_spec_on_synth_table(spark):
     """The full image-caption spec from FIXTURES.md over the synth table —
     row-level engine + synthetic violations at exact rates."""
@@ -315,36 +344,36 @@ def test_resize_images_nearest(spark):
     assert (small == img[ys][:, xs]).all()
 
 
-def test_sample_video_frames_injected_decoder_plumbing(spark):
-    from jsonschema_validator_spark.operators.multimodal import (
-        fake_video_decoder,
-        sample_video_frames,
-    )
+def test_sample_video_frames_corpus_in_one_batch(spark):
+    """Several real MJPEG AVIs in ONE Arrow batch: videos x max_frames
+    rows at the true stream indices, each frame at its video's dims, and
+    the same output on a second collect."""
+    from jsonschema_validator_spark.operators.multimodal import sample_video_frames
     from jsonschema_validator_spark.sources.codecs import decode_image
 
+    vids = synth.make_video_corpus(n_videos=3, n_frames=9, seed=42)
     df = spark.createDataFrame(
-        [("v1", bytearray(b"fake-video-payload-1")), ("v2", bytearray(b"fake-video-payload-2"))],
-        "video_id string, bytes binary",
-    )
-    out = sample_video_frames(
-        df, every_n=10, max_frames=3, decoder=fake_video_decoder
-    )
-    rows = out.collect()
-    assert len(rows) == 6
-    assert {(r["video_id"], r["frame_idx"]) for r in rows} == {
-        (v, k * 10) for v in ("v1", "v2") for k in range(3)
-    }
-    px = decode_image(bytes(rows[0]["frame_png"]))
-    assert px.shape == (16, 16, 3)
-    # deterministic: same payload → identical frames
-    again = sample_video_frames(df, every_n=10, max_frames=3, decoder=fake_video_decoder)
-    assert sorted((r["video_id"], r["frame_idx"], bytes(r["frame_png"])) for r in rows) == sorted(
-        (r["video_id"], r["frame_idx"], bytes(r["frame_png"])) for r in again.collect()
-    )
+        [(v, bytearray(d)) for v, d in vids], "video_id string, bytes binary"
+    ).coalesce(1)
+    out = sample_video_frames(df, every_n=4, max_frames=2)
+
+    def collect():
+        return sorted(
+            (r["video_id"], r["frame_idx"], r["w"], r["h"], bytes(r["frame_png"]))
+            for r in out.collect()
+        )
+
+    rows = collect()
+    assert len(rows) == 3 * 2
+    assert {(v, k) for v, k, *_ in rows} == {(v, k) for v, _ in vids for k in (0, 4)}
+    for v, _k, w, h, png in rows:
+        assert (w, h) == synth.true_dims(42, int(v))
+        assert decode_image(png).shape == (h, w, 3)
+    assert collect() == rows
 
 
 def test_sample_video_frames_real_mjpeg_avi(spark):
-    """decoder=None decodes REAL MJPEG AVI bytes end-to-end (container
+    """sample_video_frames decodes REAL MJPEG AVI bytes end-to-end (container
     walk + T.81 JPEG decode on executors): frame_idx is the true stream
     index, sampled frames round-trip at >= 40 dB vs the originals."""
     import numpy as _np
@@ -379,32 +408,25 @@ def test_sample_video_frames_real_mjpeg_avi(spark):
         sample_video_frames(bad).collect()
 
 
-def test_audio_features_injected_decoder_plumbing(spark):
-    """audio_features with the fake PCM decoder emits deterministic
-    per-clip features with correct physics (rms < peak, sinusoid
-    zero-crossing rate ≈ 2*f0/sample_rate)."""
-    from jsonschema_validator_spark.operators.multimodal import (
-        audio_features,
-        fake_audio_decoder,
-    )
+def test_audio_features_corpus_in_one_batch(spark):
+    """Several real WAV clips (rates, sample formats, a stereo mixdown) in
+    ONE Arrow batch match the independent WAV reader's features exactly,
+    and a second collect gives the same rows."""
+    from jsonschema_validator_spark.operators.multimodal import audio_features
+    from jsonschema_validator_spark.oracle import audio_feature_rows
 
+    clips = synth.make_audio_corpus(6, 42)
     df = spark.createDataFrame(
-        [("a1", bytearray(b"fake-audio-1")), ("a2", bytearray(b"fake-audio-2"))],
-        "audio_id string, bytes binary",
-    )
-    rows = {r["audio_id"]: r.asDict() for r in audio_features(df, decoder=fake_audio_decoder).collect()}
-    assert set(rows) == {"a1", "a2"}
-    for r in rows.values():
-        assert r["n_samples"] == 16000 and r["duration_sec"] == 1.0
-        assert r["sample_rate"] == 16000
-        assert 0 < r["rms"] < r["peak"] <= 1.3
-        assert 0 < r["zero_crossing_rate"] < 0.5
-    again = {r["audio_id"]: r.asDict() for r in audio_features(df, decoder=fake_audio_decoder).collect()}
-    assert rows == again  # deterministic
+        [(c, bytearray(d)) for c, d in clips], "audio_id string, bytes binary"
+    ).coalesce(1)
+    out = audio_features(df)
+    rows = sorted(tuple(r) for r in out.collect())
+    assert rows == sorted(audio_feature_rows(6, 42))
+    assert sorted(tuple(r) for r in out.collect()) == rows
 
 
 def test_audio_features_real_wav(spark):
-    """decoder=None parses REAL RIFF/WAVE bytes end-to-end: a 440 Hz
+    """audio_features parses REAL RIFF/WAVE bytes end-to-end: a 440 Hz
     sine at 8 kHz / 16-bit PCM yields the analytic rms (amp/sqrt(2)),
     peak and zero-crossing rate (2*f0/rate); stereo mixes to mono."""
     import numpy as _np
@@ -443,12 +465,15 @@ def test_audio_features_real_wav(spark):
 def test_null_payloads_dropped_not_crash(spark):
     """Review fix: bytes(None) raises TypeError, which the ValueError
     handlers did not catch — a single NULL payload killed the task in
-    image_features / resize_images / image_quality_metrics. NULL rows are
-    dropped like undecodable ones."""
+    image_features / resize_images / image_quality_metrics, and
+    sample_video_frames / audio_features. NULL rows are dropped like
+    undecodable ones."""
     from jsonschema_validator_spark.operators.multimodal import (
+        audio_features,
         image_features,
         image_quality_metrics,
         resize_images,
+        sample_video_frames,
     )
     from jsonschema_validator_spark.sources.codecs import encode_png
 
@@ -458,6 +483,16 @@ def test_null_payloads_dropped_not_crash(spark):
     assert [r["image_id"] for r in image_features(df).collect()] == ["ok"]
     assert [r["image_id"] for r in image_quality_metrics(df).collect()] == ["ok"]
     assert [r["image_id"] for r in resize_images(df, 4, 4).collect()] == ["ok"]
+    ((vid, avi),) = synth.make_video_corpus(n_videos=1, n_frames=2, seed=42)
+    vdf = spark.createDataFrame(
+        [(vid, bytearray(avi)), ("gone", None)], "video_id string, bytes binary"
+    )
+    assert {r["video_id"] for r in sample_video_frames(vdf).collect()} == {vid}
+    ((aid, wav),) = synth.make_audio_corpus(1, 42)
+    adf = spark.createDataFrame(
+        [(aid, bytearray(wav)), ("gone", None)], "audio_id string, bytes binary"
+    )
+    assert [r["audio_id"] for r in audio_features(adf).collect()] == [aid]
 
 
 def test_pixel_checksum_exact_integer_math(spark):
