@@ -600,9 +600,9 @@ def q_drift_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan per side per family (operators/drift):
 
     - numeric: even/odd l_orderkey halves of lineitem over ``l_quantity``
-      (drift_metrics — every row bucketizes once, one groupBy builds all
-      histograms, the four statistics reduce the same ≤(n_buckets+2)-row
-      join);
+      (drift_metrics — every row bucketizes once, one tagged groupBy
+      over both halves builds all histograms, the four statistics reduce
+      each column's ≤(n_buckets+2)-entry histogram array);
     - embedding (array<float>): ``label < 5`` vs ``label >= 5`` halves of
       the embeddings table via embedding_drift_metrics — Cramér–Wold
       random-projection drift (4 cosine projections + the L2 norm,
@@ -1191,10 +1191,11 @@ def q_categorical_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver slot (50-query cap), unpivoted to a uniform (column, stat,
     value) schema:
 
-    - categorical drift (operators/drift.categorical_drift): chi-squared
-      homogeneity + Cramér's V + total-variation distance on l_returnflag
-      between the even/odd orderkey halves — the unordered-column
-      complement of drift_stats_quantity's KS/PSI/JS.
+    - categorical drift (operators/drift.categorical_drift_metrics):
+      chi-squared homogeneity + Cramér's V + total-variation distance on
+      l_returnflag and l_linestatus between the even/odd orderkey halves,
+      both columns from one scan per half — the unordered-column
+      complement of drift_stats_profile's KS/PSI/JS/EMD.
     - exact heavy hitters (operators/stats.heavy_hitters): top-4 of the 5
       o_orderpriority values with global shares — k below the cardinality
       so the TakeOrderedAndProject cutoff is exercised, and both the n and
@@ -1205,11 +1206,11 @@ def q_categorical_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpivot runs AFTER each aggregate so every statistic is computed once
     (a per-stat select union would re-run the whole drift aggregation per
     branch)."""
-    from jsonschema_validator_spark.operators.drift import categorical_drift
+    from jsonschema_validator_spark.operators.drift import categorical_drift_metrics
     from jsonschema_validator_spark.operators.stats import heavy_hitters
 
     a, b = _halves(spark, sf_dir)
-    cd = categorical_drift(a, b, "l_returnflag")
+    cd = categorical_drift_metrics(a, b, ["l_returnflag", "l_linestatus"])
     drift_rows = cd.selectExpr(
         "column",
         "stack(5, 'chi2', chi2, 'cramers_v', cramers_v, 'tvd', tvd, "
@@ -2733,7 +2734,7 @@ _DRIFT_STATS_SQL = (
          sum(pa) OVER (ORDER BY bucket) AS ca,
          sum(pb) OVER (ORDER BY bucket) AS cb,
          -- last-row gap spans through the overflow bucket (n_buckets+2=52),
-         -- matching _reduce_distribution_stats' one-sided EMD tail; for
+         -- matching _distribution_stats' one-sided EMD tail; for
          -- this two-sided column the last-row CDF diff is 0 (weight moot)
          COALESCE(lead(bucket) OVER (ORDER BY bucket), 52) - bucket AS gap
   FROM j
@@ -2756,7 +2757,7 @@ SELECT 'l_quantity' AS "column",
 # _CATEGORICAL_PROFILE_SQL contingency formulas, the LATERAL
 # quantile_cont robust-outlier chain). EMD's last-row gap spans through
 # the overflow bucket (n_buckets+2 = 52), matching
-# _reduce_distribution_stats' one-sided tail convention.
+# _distribution_stats' one-sided tail convention.
 _PER_GROUP_LOCALIZATION_SQL = """
 WITH ga AS (
   SELECT l_returnflag AS grp,
@@ -3594,24 +3595,30 @@ FROM e
 """
 
 # categorical drift: the same contingency-table formulas as
-# operators/drift.categorical_drift (chi2 under homogeneity, Cramér's V =
-# sqrt(chi2/N) for a 2xk table, TVD = half the L1 share gap), expressed
-# independently in DuckDB; heavy hitters: exact counts + shares with the
-# identical (n DESC, value ASC) deterministic cutoff
+# operators/drift.categorical_drift_metrics (chi2 under homogeneity,
+# Cramér's V = sqrt(chi2/N) for a 2xk table, TVD = half the L1 share gap),
+# expressed independently in DuckDB per column; heavy hitters: exact
+# counts + shares with the identical (n DESC, value ASC) deterministic
+# cutoff
 _CATEGORICAL_PROFILE_SQL = """
-WITH ha AS (
-  SELECT l_returnflag AS cat, CAST(count(*) AS DOUBLE) AS na
-  FROM lineitem WHERE l_orderkey % 2 = 0 AND l_returnflag IS NOT NULL GROUP BY 1
+WITH src AS (
+  SELECT l_orderkey % 2 AS side, 'l_returnflag' AS col, l_returnflag AS cat
+  FROM lineitem
+  UNION ALL
+  SELECT l_orderkey % 2, 'l_linestatus', l_linestatus FROM lineitem
+), ha AS (
+  SELECT col, cat, CAST(count(*) AS DOUBLE) AS na
+  FROM src WHERE side = 0 AND cat IS NOT NULL GROUP BY 1, 2
 ), hb AS (
-  SELECT l_returnflag AS cat, CAST(count(*) AS DOUBLE) AS nb
-  FROM lineitem WHERE l_orderkey % 2 = 1 AND l_returnflag IS NOT NULL GROUP BY 1
+  SELECT col, cat, CAST(count(*) AS DOUBLE) AS nb
+  FROM src WHERE side = 1 AND cat IS NOT NULL GROUP BY 1, 2
 ), j AS (
-  SELECT COALESCE(na, 0) AS na, COALESCE(nb, 0) AS nb
-  FROM ha FULL OUTER JOIN hb USING (cat)
+  SELECT col, COALESCE(na, 0) AS na, COALESCE(nb, 0) AS nb
+  FROM ha FULL OUTER JOIN hb USING (col, cat)
 ), t AS (
-  SELECT count(*) AS k, sum(na) AS ta, sum(nb) AS tb FROM j
+  SELECT col, count(*) AS k, sum(na) AS ta, sum(nb) AS tb FROM j GROUP BY col
 ), stats AS (
-  SELECT CAST(max(k) AS DOUBLE) AS n_categories,
+  SELECT col, CAST(max(k) AS DOUBLE) AS n_categories,
          round(sum(pow(na - (na+nb)*ta/(ta+tb), 2) / ((na+nb)*ta/(ta+tb))
                  + pow(nb - (na+nb)*tb/(ta+tb), 2) / ((na+nb)*tb/(ta+tb))), 6) AS chi2,
          CAST(max(k) - 1 AS DOUBLE) AS dof,
@@ -3619,7 +3626,7 @@ WITH ha AS (
                       + pow(nb - (na+nb)*tb/(ta+tb), 2) / ((na+nb)*tb/(ta+tb)))
                     / max(ta+tb)), 6) AS cramers_v,
          round(0.5 * sum(abs(na/ta - nb/tb)), 6) AS tvd
-  FROM j CROSS JOIN t
+  FROM j JOIN t USING (col) GROUP BY col
 ), hh AS (
   SELECT COALESCE(CAST(o_orderpriority AS VARCHAR), 'NULL') AS value,
          CAST(count(*) AS BIGINT) AS n,
@@ -3629,11 +3636,11 @@ WITH ha AS (
   ORDER BY n DESC, value ASC
   LIMIT 4
 )
-SELECT 'l_returnflag' AS "column", 'chi2' AS stat, chi2 AS value FROM stats
-UNION ALL SELECT 'l_returnflag', 'cramers_v', cramers_v FROM stats
-UNION ALL SELECT 'l_returnflag', 'tvd', tvd FROM stats
-UNION ALL SELECT 'l_returnflag', 'n_categories', n_categories FROM stats
-UNION ALL SELECT 'l_returnflag', 'dof', dof FROM stats
+SELECT col AS "column", 'chi2' AS stat, chi2 AS value FROM stats
+UNION ALL SELECT col, 'cramers_v', cramers_v FROM stats
+UNION ALL SELECT col, 'tvd', tvd FROM stats
+UNION ALL SELECT col, 'n_categories', n_categories FROM stats
+UNION ALL SELECT col, 'dof', dof FROM stats
 UNION ALL SELECT 'o_orderpriority', 'share:' || value, share FROM hh
 UNION ALL SELECT 'o_orderpriority', 'n:' || value, CAST(n AS DOUBLE) FROM hh
 """

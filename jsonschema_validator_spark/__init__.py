@@ -13,7 +13,7 @@ Layers
   ValidationError shape (/root/reference/errors/errors.go:24-39).
 - ``operators``: table-level checks the north rule adds on top of the
   reference: column stats, uniqueness (salted), referential integrity,
-  distribution drift (KS/PSI), dedup, similarity search, text analysis,
+  distribution drift (KS/PSI/JS/EMD), dedup, similarity search, text analysis,
   multimodal payload checks.
 - ``sources``: table IO + snapshot/manifest checkpointing + deterministic
   synthetic image-caption data.

@@ -7,7 +7,7 @@ unions the verdict rows of:
 1. keyword validation  — one-pass packed predicates → per-partition verdicts
 2. uniqueness          — image_id + phash, salted two-phase agg (skew-safe)
 3. referential         — fmt → dim_formats broadcast anti-join
-4. drift               — KS + PSI on w/h/phash histograms vs a baseline
+4. drift               — KS/PSI/JS/EMD on w/h/phash histograms vs a baseline
 5. decode invariant    — Arrow-batched decode: payload decodes, dims match;
    the decode pass also counts the rows it checked, so ``n_checked`` is
    computed inside the plan
@@ -27,7 +27,8 @@ Scale design (10^12 rows / 1000 executors):
 - (2) uses the salted two-phase aggregation so the 8 hot phashes (5 % of all
   rows at scale) cannot melt a single reducer.
 - (3) broadcasts the 3-row dim table — no shuffle of the fact table.
-- (4) aggregates to ≤n_buckets rows BEFORE any window/cumsum — driver-safe.
+- (4) aggregates both sides to ≤n_buckets rows per column in one tagged
+  aggregate, then reduces each column's histogram array — driver-safe.
 - every family returns a verdict row in one common shape so the whole suite
   unions into a single small verdicts table: ``(family, rule_id, n_checked,
   n_failed, pass)``.
@@ -175,7 +176,7 @@ class ImageValidationSuite:
         )
 
     def drift(self) -> DataFrame:
-        """KS + PSI for every drift column in ONE scan per table
+        """KS, PSI, JS and EMD for every drift column in ONE scan per table
         (operators.drift.drift_metrics — not the per-column composition,
         which would scan 2×n_columns times)."""
         from jsonschema_validator_spark.operators.drift import drift_metrics

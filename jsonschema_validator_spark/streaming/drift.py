@@ -15,11 +15,12 @@ Split into the two pieces Structured Streaming actually allows:
    operators (``width_bucket``), so histograms are comparable and
    oracle-portable.
 2. :func:`drift_vs_baseline` — BATCH post-processing over the tiny
-   histogram table (one row per (window, bucket)): per-window shares vs
-   the baseline's shares → KS (windowed cumulative sup-norm) and PSI.
-   Analytic window functions aren't allowed on unbounded streams, so
-   this runs on the drained sink (or with ``foreachBatch``); its input
-   is sketch-sized, never row-scale.
+   histogram table (one row per (window, bucket)): each window's counts
+   against the baseline's → KS and PSI, through the same side-count
+   aggregate and array reduction as the batch operators
+   (operators/drift._side_counts / _distribution_stats), so batch and
+   streaming statistics cannot diverge. It runs on the drained sink (or
+   with ``foreachBatch``); its input is sketch-sized, never row-scale.
 
 At 10^12 rows: the stream only ever shuffles histogram increments; the
 drift math touches n_windows × n_buckets rows. Gated end-to-end by the
@@ -29,8 +30,14 @@ re-implementation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from jsonschema_validator_spark.operators.drift import (
+    _distribution_stats,
+    _reduce_categorical_stats,
+    _side_counts,
+)
 
 
 def windowed_histograms(
@@ -68,52 +75,22 @@ def drift_vs_baseline(
     ``win_hist``: ``window_start long, bucket, n`` (cast ``window.start``
     to long before calling — the drained-sink shape).
     ``baseline_hist``: ``bucket, n`` from operators/drift.histogram.
-    Output: ``window_start, ks, psi`` — one row per window.
+    Output: ``window_start, ks, psi`` — one row per window, equal to
+    operators/drift.drift_metrics between the baseline rows (side a) and
+    that window's rows (side b).
     """
-    w_tot = Window.partitionBy("window_start")
-    wins = win_hist.select(
-        "window_start",
-        "bucket",
-        (F.col("n") / F.sum("n").over(w_tot)).alias("share_w"),
+    # the baseline rows must appear under EVERY window, or a bucket the
+    # window lost entirely would drop out of its CDF and PSI
+    base = (
+        win_hist.select("window_start")
+        .distinct()
+        .crossJoin(baseline_hist.select("bucket", "n"))
     )
-    b_tot = Window.partitionBy()
-    base = baseline_hist.select(
-        "bucket", (F.col("n") / F.sum("n").over(b_tot)).alias("share_b")
-    )
-    # bucket grid per window = baseline buckets ∪ window buckets (a bucket
-    # absent from both contributes nothing to either statistic)
-    grid = wins.select("window_start").distinct().crossJoin(base)
-    j = (
-        grid.join(wins, ["window_start", "bucket"], "full_outer")
-        .select(
-            "window_start",
-            "bucket",
-            F.coalesce("share_w", F.lit(0.0)).alias("pw"),
-            F.coalesce("share_b", F.lit(0.0)).alias("pb"),
-        )
-    )
-    w_cum = (
-        Window.partitionBy("window_start")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = j.select(
-        "window_start",
-        F.sum("pw").over(w_cum).alias("cw"),
-        F.sum("pb").over(w_cum).alias("cb"),
-        F.col("pw"),
-        F.col("pb"),
-    )
-    return cum.groupBy("window_start").agg(
-        F.round(F.max(F.abs(F.col("cw") - F.col("cb"))), round_to).alias("ks"),
-        F.round(
-            F.sum(
-                (F.greatest("pw", F.lit(eps)) - F.greatest("pb", F.lit(eps)))
-                * F.log(F.greatest("pw", F.lit(eps)) / F.greatest("pb", F.lit(eps)))
-            ),
-            round_to,
-        ).alias("psi"),
-    )
+    counts = _side_counts(base, win_hist, ["window_start"])
+    # EMD is not reported here, so its grid size and bucket width are moot
+    return _distribution_stats(
+        counts, ["window_start"], 0, 0.0, eps, round_to
+    ).select("window_start", "ks", "psi")
 
 
 def windowed_category_counts(
@@ -161,10 +138,6 @@ def categorical_drift_vs_baseline(
     Input is sketch-sized (n_windows × n_categories rows), never
     row-scale.
     """
-    from jsonschema_validator_spark.operators.drift import (
-        _reduce_categorical_stats,
-    )
-
     # category grid per window = baseline cats ∪ window cats (the
     # baseline rows must appear under EVERY window, or a category the
     # window lost entirely would vanish from its table)

@@ -483,6 +483,32 @@ def test_image_suite_only_python_stage_is_the_decode(spark, tmp_path):
     assert _PYTHON_NODE.findall(final) == ["MapInArrow"], final
 
 
+_NUMERIC_DRIFT = {
+    "drift_metrics": lambda d, a, b: d.drift_metrics(a, b, ["l_quantity"], 0.5, 50.5, 50),
+    "drift_by_group": lambda d, a, b: d.drift_by_group(
+        a, b, "l_returnflag", "l_quantity", 0.5, 50.5, 50
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_NUMERIC_DRIFT))
+def test_numeric_drift_one_aggregate_one_reduction(spark, name):
+    """Numeric drift is one tagged side-count aggregate plus one array
+    reduction per key: at most two shuffles, and no window or join over
+    the histograms."""
+    from jsonschema_validator_spark.operators import drift
+
+    df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    a = df.filter(F.col("l_orderkey") % 2 == 0)
+    b = df.filter(F.col("l_orderkey") % 2 == 1)
+    out = _NUMERIC_DRIFT[name](drift, a, b)
+    out.collect()
+    final = _final_plan(out)
+    assert not re.search(r"\bWindow\b", final), final
+    assert "Join" not in final, final
+    assert len(re.findall(r"\bExchange\b", final)) <= 2, final
+
+
 _GRAY = np.full((8, 8, 3), 90, np.uint8)
 
 

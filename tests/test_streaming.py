@@ -282,25 +282,32 @@ def test_streaming_dedup_state_ttl(spark, tmp_path):
 
 def test_drift_vs_baseline_identity_and_shift(spark):
     """drift_vs_baseline: a window with the baseline's own histogram has
-    KS = PSI = 0; a shifted window has both > 0."""
+    KS = PSI = 0; a shifted window has both > 0; each window's values
+    equal the batch drift_metrics on the equivalent row sets (shared
+    reduction). The shifted window lacks baseline buckets 1-10, so PSI's
+    baseline-only terms are in the comparison."""
     from pyspark.sql import functions as F
 
-    from jsonschema_validator_spark.operators.drift import histogram
+    from jsonschema_validator_spark.operators.drift import drift_metrics, histogram
     from jsonschema_validator_spark.streaming.drift import drift_vs_baseline
 
     df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    df_shift = df.select((F.col("l_quantity") + 10).alias("l_quantity"))
     base = histogram(df, "l_quantity", 0.5, 50.5, 50)
     same = base.select(F.lit(100).alias("window_start"), "bucket", "n")
-    shifted = histogram(
-        df.select((F.col("l_quantity") + 10).alias("l_quantity")),
-        "l_quantity", 0.5, 50.5, 50,
-    ).select(F.lit(200).alias("window_start"), "bucket", "n")
+    shifted = histogram(df_shift, "l_quantity", 0.5, 50.5, 50).select(
+        F.lit(200).alias("window_start"), "bucket", "n"
+    )
+    assert shifted.filter("bucket <= 10").count() == 0
     out = {
         r["window_start"]: (r["ks"], r["psi"])
         for r in drift_vs_baseline(same.unionAll(shifted), base).collect()
     }
     assert out[100] == (0.0, 0.0)
     assert out[200][0] > 0.1 and out[200][1] > 0.1
+    for start, df_win in ((100, df), (200, df_shift)):
+        ref = drift_metrics(df, df_win, ["l_quantity"], 0.5, 50.5, 50).collect()[0]
+        assert out[start] == (ref["ks"], ref["psi"]), start
 
 
 def test_categorical_drift_vs_baseline_identity_and_shift(spark):

@@ -267,6 +267,7 @@ class TestDriftByGroup:
         rows_a = (
             [("g1", float(i % 20 + 1)) for i in range(200)]
             + [("g2", float(i % 20 + 1)) for i in range(200)]
+            + [("g2", float("nan"))]  # no bucket: excluded, like drift_metrics
         )
         rows_b = (
             [("g1", float(i % 20 + 1)) for i in range(200)]
@@ -293,6 +294,7 @@ class TestDriftByGroup:
             for stat in ("ks", "psi", "js", "emd"):
                 assert out[g][stat] == ref[stat], (g, stat)
         assert out["g1"]["ks"] == 0.0 and out["g1"]["emd"] == 0.0
+        assert out["g2"]["n_a"] == 200
         assert out["g2"]["emd"] == pytest.approx(10.0, abs=1e-9)
         # one-sided group: nothing-vs-something is maximal drift, and EMD
         # measures the FULL transport tail — mass at bucket 25 with a CDF
