@@ -209,10 +209,9 @@ def q_quantiles_extendedprice(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_uniqueness_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both uniqueness surfaces in one result (merged to keep the registry
-    at the driver's 50-query cap): the duplicate-key rows from the plain
-    one-shuffle plan AND the table-level verdict from the salted two-phase
-    plan, unioned to a common schema (kind discriminates). The salted and
-    plain plans are count-algebraic so results are bit-identical."""
+    at the driver's 50-query cap): the duplicate-key rows AND the
+    table-level verdict, both one-shuffle key counts, unioned to a common
+    schema (kind discriminates)."""
     from jsonschema_validator_spark.operators.uniqueness import (
         duplicate_keys,
         uniqueness_verdict,
@@ -222,7 +221,7 @@ def q_uniqueness_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # -1 sentinels (not NULLs) for the fields the other kind owns: the
     # driver's row sort compares cells positionally and NULL-vs-value on a
     # tied prefix is undefined across engines.
-    dups = duplicate_keys(df, "l_orderkey", salted=False).select(
+    dups = duplicate_keys(df, "l_orderkey").select(
         F.lit("dup_key").alias("kind"),
         F.lit("unique:l_orderkey").alias("rule_id"),
         F.col("l_orderkey").cast("long").alias("l_orderkey"),
@@ -232,7 +231,7 @@ def q_uniqueness_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(False).alias("pass"),
         F.lit(-1).cast("long").alias("dup_keys"),
     )
-    verdict = uniqueness_verdict(df, "l_orderkey", salted=True).select(
+    verdict = uniqueness_verdict(df, "l_orderkey").select(
         F.lit("verdict").alias("kind"),
         F.col("rule_id"),
         F.lit(-1).cast("long").alias("l_orderkey"),
@@ -1355,8 +1354,8 @@ def _images(spark: SparkSession, n: int = _IMAGES_N, seed: int = 42):
 
 def q_images_suite_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship: ALL north-rule check families over the image-caption
-    table — keyword, uniqueness (salted), referential (broadcast), drift
-    (same-seed baseline), decode invariant — in one verdicts table."""
+    table — keyword, uniqueness (partial count), referential (broadcast),
+    drift (same-seed baseline), decode invariant — in one verdicts table."""
     from jsonschema_validator_spark.pipeline import ImageValidationSuite
     from jsonschema_validator_spark.sources import synth
 

@@ -435,8 +435,9 @@ def bench_ref_skew(spark, n: int = 2_000_000, runs: int = 3) -> dict:
     on one hot nationkey, anti-joined to the nation dim on the sort-merge
     path with AQE skew-join thresholds sized for the data volume. Reports
     the timing AND whether the executed plan engaged the skew split —
-    the north rule's skew story for joins (aggregation is covered by the
-    salted uniqueness path)."""
+    the north rule's skew story for joins (aggregation needs no split: the
+    uniqueness count's map-side partial aggregate sends a hot key as one
+    row per map task)."""
     import statistics
 
     from pyspark.sql import functions as F

@@ -12,7 +12,7 @@ Layers
   ``(path, message, value, tag, param)`` matching the reference's
   ValidationError shape (/root/reference/errors/errors.go:24-39).
 - ``operators``: table-level checks the north rule adds on top of the
-  reference: column stats, uniqueness (salted), referential integrity,
+  reference: column stats, uniqueness, referential integrity,
   distribution drift (KS/PSI/JS/EMD), dedup, similarity search, text analysis,
   multimodal payload checks.
 - ``sources``: table IO + snapshot/manifest checkpointing + deterministic

@@ -39,10 +39,11 @@ def histogram(
 
     ``width_bucket`` puts values < lo in bucket 0 and >= hi in n_buckets+1,
     exactly like the SQL-standard function (portable to the DuckDB oracle).
+    NULL and NaN values have a NULL bucket and are dropped.
     """
     b = F.width_bucket(F.col(column).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_buckets))
     return (
-        df.filter(F.col(column).isNotNull())
+        df.filter(b.isNotNull())
         .groupBy(b.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -236,41 +236,32 @@ def tdigest_sketches(
         schema="partition string, column string, sketch binary, n_values long",
     )
 
-    def reduce_digests(key, pdf):
-        blob = merge_blobs(list(pdf["sketch"]), compression)
-        return pd.DataFrame(
-            {
-                "partition": [key[0]],
-                "column": [key[1]],
-                "sketch": [blob],
-                "n_values": [int(pdf["n_values"].sum())],
-            }
-        )
-
-    return stage1.groupBy("partition", "column").applyInPandas(
-        reduce_digests,
-        schema="partition string, column string, sketch binary, n_values long",
-    )
+    return _merge_digest_rows(stage1, ["partition", "column"], compression)
 
 
 def merge_tdigests(sketches, compression: float = _DEFAULT_COMPRESSION):
     """Collapse per-partition digest rows to one digest per column
     (the resume/merge algebra — same role as ``merge_hll_sketches``)."""
+    return _merge_digest_rows(sketches, ["column"], compression)
+
+
+def _merge_digest_rows(sketches, keys: Sequence[str], compression: float):
+    """One ``*keys, sketch, n_values`` row per ``keys`` group (string key
+    columns): the group's blobs merged by :func:`merge_blobs`, its value
+    counts summed."""
     import pandas as pd
 
     def reduce_digests(key, pdf):
-        blob = merge_blobs(list(pdf["sketch"]), compression)
         return pd.DataFrame(
             {
-                "column": [key[0]],
-                "sketch": [blob],
+                **{k: [v] for k, v in zip(keys, key)},
+                "sketch": [merge_blobs(list(pdf["sketch"]), compression)],
                 "n_values": [int(pdf["n_values"].sum())],
             }
         )
 
-    return sketches.groupBy("column").applyInPandas(
-        reduce_digests, schema="column string, sketch binary, n_values long"
-    )
+    schema = "".join(f"{k} string, " for k in keys) + "sketch binary, n_values long"
+    return sketches.groupBy(*keys).applyInPandas(reduce_digests, schema=schema)
 
 
 def tdigest_quantiles(merged, probs: Sequence[float]):

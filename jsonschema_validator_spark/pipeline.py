@@ -5,7 +5,7 @@ Composes every check family the engine has over one image+caption table
 unions the verdict rows of:
 
 1. keyword validation  — one-pass packed predicates → per-partition verdicts
-2. uniqueness          — image_id + phash, salted two-phase agg (skew-safe)
+2. uniqueness          — image_id + phash, one (key, value) count shuffle
 3. referential         — fmt → dim_formats broadcast anti-join
 4. drift               — KS/PSI/JS/EMD on w/h/phash histograms vs a baseline
 5. decode invariant    — Arrow-batched decode: payload decodes, dims match;
@@ -24,8 +24,9 @@ Scale design (10^12 rows / 1000 executors):
 - every family is a SEPARATE Spark job over the same scan, each single-pass;
   the `bytes` column is ONLY read by (5) — column pruning keeps scans 1-4
   metadata-cheap (verified via .explain ReadSchema).
-- (2) uses the salted two-phase aggregation so the 8 hot phashes (5 % of all
-  rows at scale) cannot melt a single reducer.
+- (2) counts (key, value) pairs with a map-side partial count under the
+  one exchange, so each of the 8 hot phashes (5 % of all rows at scale)
+  reaches its reducer as at most one row per map task.
 - (3) broadcasts the 3-row dim table — no shuffle of the fact table.
 - (4) aggregates both sides to ≤n_buckets rows per column in one tagged
   aggregate, then reduces each column's histogram array — driver-safe.
@@ -162,8 +163,8 @@ class ImageValidationSuite:
     def uniqueness_verdicts(self) -> DataFrame:
         from jsonschema_validator_spark.operators.uniqueness import multi_key_uniqueness
 
-        # both keys in ONE shuffle round (salted, skew-safe)
-        return multi_key_uniqueness(self._meta, ["image_id", "phash"], salted=True)
+        # both keys in ONE shuffle round
+        return multi_key_uniqueness(self._meta, ["image_id", "phash"])
 
     def referential_verdict(self) -> DataFrame:
         from jsonschema_validator_spark.operators.referential import referential_verdict

@@ -52,12 +52,13 @@ def windowed_histograms(
 ) -> DataFrame:
     """Streaming fixed-edge histogram per event-time window:
     ``window struct, bucket, n`` (bucket 0 / n_buckets+1 are under/overflow,
-    same convention as operators/drift.histogram)."""
+    same convention as operators/drift.histogram; NULL and NaN values have
+    a NULL bucket and are dropped before they reach state)."""
     b = F.width_bucket(
         F.col(column).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_buckets)
     )
     return (
-        stream.filter(F.col(column).isNotNull())
+        stream.filter(b.isNotNull())
         .withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window), b.alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))

@@ -370,7 +370,7 @@ class TestUniquenessReferentialReviewRegressions:
         df = spark.createDataFrame(
             [(1, "a"), (1, "b"), (2, "c")], "k long, payload string"
         )
-        out = duplicate_rows(df, "k", salted=False)
+        out = duplicate_rows(df, "k")
         assert out.columns == ["k", "payload", "n_dup"]  # k exactly once
         assert out.count() == 2
 
@@ -394,7 +394,7 @@ class TestUniquenessReferentialReviewRegressions:
             [(1, "x"), (1, "x"), (2, "y"), (None, "y"), (None, "z")],
             "k string, v string",
         )
-        r = uniqueness_verdict(df, "k", salted=True).collect()[0]
+        r = uniqueness_verdict(df, "k").collect()[0]
         # n_checked = ALL rows (derived from the group counts, no 2nd scan;
         # NULL keys group together like any value)
         assert (r["n_checked"], r["n_failed"], r["dup_keys"]) == (5, 4, 2)

@@ -132,7 +132,7 @@ def test_ngram_jaccard_all_pairs_requires_opt_in(spark):
 
 
 def test_referential_skewed_fk_aqe_skew_split(spark):
-    """Skew story for JOINS (the salted path covers aggregation): a fact
+    """Skew story for JOINS (aggregation relies on the partial count): a fact
     table with one hot nationkey (~30-40% of all rows) against the nation
     dim on the sort-merge anti-join path must engage AQE's skew-join
     splitting — the executed plan shows SortMergeJoin(skew=true) with an
@@ -553,3 +553,42 @@ def test_payload_operator_single_arrow_node(spark, name):
     out.collect()
     final = _final_plan(out)
     assert _PYTHON_NODE.findall(final) == ["MapInArrow"], final
+
+
+_UNIQUENESS = {
+    "uniqueness_verdict": (
+        ["l_orderkey", "l_linenumber"],
+        lambda u, df: u.uniqueness_verdict(df, ["l_orderkey", "l_linenumber"]),
+    ),
+    "multi_key_uniqueness": (
+        ["key", "value"],
+        lambda u, df: u.multi_key_uniqueness(df, ["l_orderkey", "l_partkey"]),
+    ),
+    "duplicate_keys": (["l_orderkey"], lambda u, df: u.duplicate_keys(df, "l_orderkey")),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_UNIQUENESS))
+def test_uniqueness_count_partial_agg_under_key_exchange(spark, name):
+    """Each uniqueness count is one plain ``groupBy(keys)`` count: the only
+    exchange on the group columns sits directly on the map-side
+    ``partial_count``, so a hot key crosses the shuffle as one row per map
+    task and no salt column or second count shuffle is needed."""
+    from jsonschema_validator_spark.operators import uniqueness
+
+    group, build = _UNIQUENESS[name]
+    out = build(uniqueness, spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet"))
+    out.collect()
+    final = _final_plan(out)
+    assert "_salt" not in final
+    lines = final.splitlines()
+    hashed = [i for i, l in enumerate(lines) if "Exchange hashpartitioning(" in l]
+    on_group = [
+        i for i in hashed
+        if re.findall(r"(\w+)#\d+", lines[i].split("hashpartitioning(", 1)[1]) == group
+    ]
+    assert len(on_group) == 1, lines
+    child = lines[on_group[0] + 1]
+    assert "HashAggregate(" in child and "partial_count(" in child, lines
+    if name == "uniqueness_verdict":
+        assert len(hashed) == 1, lines

@@ -285,15 +285,29 @@ def test_drift_vs_baseline_identity_and_shift(spark):
     KS = PSI = 0; a shifted window has both > 0; each window's values
     equal the batch drift_metrics on the equivalent row sets (shared
     reduction). The shifted window lacks baseline buckets 1-10, so PSI's
-    baseline-only terms are in the comparison."""
+    baseline-only terms are in the comparison. One NaN value is dropped
+    like a NULL by both histogram builders (``width_bucket(NaN)`` is NULL,
+    a bucket no range covers)."""
     from pyspark.sql import functions as F
 
     from jsonschema_validator_spark.operators.drift import drift_metrics, histogram
-    from jsonschema_validator_spark.streaming.drift import drift_vs_baseline
+    from jsonschema_validator_spark.streaming.drift import (
+        drift_vs_baseline,
+        windowed_histograms,
+    )
 
-    df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    df = (
+        spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+        .select(F.col("l_quantity").cast("double"))
+        .unionAll(spark.range(1).select(F.lit(float("nan")).alias("l_quantity")))
+    )
     df_shift = df.select((F.col("l_quantity") + 10).alias("l_quantity"))
     base = histogram(df, "l_quantity", 0.5, 50.5, 50)
+    win = windowed_histograms(
+        df.withColumn("ts", F.lit(0).cast("timestamp")), "ts", "l_quantity", 0.5, 50.5, 50
+    )
+    for hist in (base, win):
+        assert hist.filter(F.col("bucket").isNull()).count() == 0
     same = base.select(F.lit(100).alias("window_start"), "bucket", "n")
     shifted = histogram(df_shift, "l_quantity", 0.5, 50.5, 50).select(
         F.lit(200).alias("window_start"), "bucket", "n"

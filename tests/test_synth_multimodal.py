@@ -209,21 +209,17 @@ def test_validation_spec_on_synth_table(spark):
     assert v["minLength:$.caption"]["n_failed"] == exp_empty
 
 
-def test_salted_uniqueness_on_skewed_phash(spark):
-    """Salted and plain aggregation agree on the skewed phash column."""
+def test_skewed_phash_duplicate_counts_match_pandas(spark):
+    """duplicate_keys on the skewed phash column equals an independent
+    pandas ``value_counts()`` of the same synth rows."""
     from jsonschema_validator_spark.operators.uniqueness import duplicate_keys
 
     sdf = synth.generate_spark(spark, N, seed=42, partitions=8).select("phash")
-    plain = {
-        (r["phash"], r["n_dup"]) for r in duplicate_keys(sdf, "phash", salted=False).collect()
-    }
-    salted = {
-        (r["phash"], r["n_dup"])
-        for r in duplicate_keys(sdf, "phash", salted=True, salt_buckets=16).collect()
-    }
-    assert plain == salted
+    got = {(r["phash"], r["n_dup"]) for r in duplicate_keys(sdf, "phash").collect()}
+    vc = synth.generate_pandas(N, seed=42)["phash"].value_counts()
+    assert got == {(int(k), int(n)) for k, n in vc[vc > 1].items()}
     # the 8 hot values must be present with ~N/20/8 rows each
-    hot_counts = {k: n for k, n in plain if k in synth.HOT_PHASHES}
+    hot_counts = {k: n for k, n in got if k in synth.HOT_PHASHES}
     assert len(hot_counts) == 8
     assert sum(hot_counts.values()) == N // 20
 
