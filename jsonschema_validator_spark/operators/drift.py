@@ -1,28 +1,36 @@
-"""Distribution-drift tests: KS, PSI, JS and EMD over histograms.
+"""Distribution-drift tests: KS, PSI, JS and EMD over histograms, and
+chi²/Cramér's V/TVD over category counts.
 
 North rule: "KS/PSI distribution-drift tests on w/h/phash histograms".
 Implementation is pure DataFrame algebra (SURVEY.md §2.5):
 
 1. bucketize both sides with the SAME fixed bucket edges
-   (``width_bucket`` — deterministic, no sampling),
+   (``width_bucket`` — deterministic, no sampling); a categorical
+   column's bucket is its value cast to string,
 2. ONE tagged ``groupBy(keys, bucket)`` over the union of both sides
    counts each side (map-side partial agg; the shuffle moves only
-   ≤ n_keys × (n_buckets+2) rows) — :func:`_side_counts`,
-3. ``groupBy(keys)`` collects each key's sorted histogram into one array,
-   and one reduction over that array computes every statistic — the CDFs
-   for KS and EMD in one ``aggregate`` fold, PSI and JS as array sums
-   (:func:`_distribution_stats`).
+   ≤ n_keys × (n_buckets+2) rows, or n_keys × n_categories) —
+   :func:`_side_counts`,
+3. ``groupBy(keys)`` collects each key's sorted histogram into one array
+   (:func:`_per_key_histograms`), and one reduction over that array
+   computes every statistic of a family — the CDFs for KS and EMD in one
+   ``aggregate`` fold, PSI and JS as array sums
+   (:func:`_distribution_stats`); chi² and TVD as array sums
+   (:func:`_categorical_stats`).
 
 At 100 TB each side costs one scan; everything after the first groupBy
-operates on ≤ n_keys × (n_buckets+2) rows, so the numeric drift plan has
-no window and no join. The batch operators (per column, per group, per
-embedding projection) and the streaming ``drift_vs_baseline`` all go
-through the same two helpers.
+operates on histogram-sized input, so neither the numeric nor the
+categorical drift plan has a window or a join. The batch operators (per
+column, per group, per embedding projection) and the streaming
+``drift_vs_baseline`` / ``categorical_drift_vs_baseline`` all go through
+the same helpers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .similarity import double_array_lit
@@ -72,6 +80,54 @@ def _side_counts(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
+def _per_key_histograms(counts: DataFrame, keys: list[str]) -> DataFrame:
+    """``keys..., _h, n_a, n_b`` from a ``(keys..., bucket, na, nb)`` table:
+    each key's histogram as one bucket-sorted ``array<struct<bucket, na,
+    nb>>`` plus the two side totals — the step both statistic families
+    reduce from. The sort makes every later array sum run in one fixed
+    order, so a statistic does not depend on the shuffle's row order."""
+    return counts.groupBy(*keys).agg(
+        F.array_sort(F.collect_list(F.struct("bucket", "na", "nb"))).alias("_h"),
+        F.sum("na").alias("n_a"),
+        F.sum("nb").alias("n_b"),
+    )
+
+
+def _column_counts(
+    df_a: DataFrame, df_b: DataFrame, columns: list[str], bucket: Callable[[str], Column]
+) -> DataFrame:
+    """:func:`_side_counts` keyed by ``column``: every source row explodes
+    into one ``(column, bucket(column), 1)`` row per listed column, so all
+    columns' histograms come from one scan per side (column pruning keeps
+    only the listed columns)."""
+
+    def rows(df: DataFrame) -> DataFrame:
+        arr = F.array(
+            *[F.struct(F.lit(c).alias("column"), bucket(c).alias("bucket")) for c in columns]
+        )
+        return df.select(F.explode(arr).alias("p")).select(
+            "p.column", "p.bucket", F.lit(1).alias("n")
+        )
+
+    return _side_counts(rows(df_a), rows(df_b), ["column"])
+
+
+def _group_counts(
+    df_a: DataFrame, df_b: DataFrame, group_col: str, bucket: Column
+) -> DataFrame:
+    """:func:`_side_counts` keyed by ``group`` (rendered as string) over
+    ``(group, bucket, 1)`` rows; NULL groups are dropped here."""
+
+    def rows(df: DataFrame) -> DataFrame:
+        return df.filter(F.col(group_col).isNotNull()).select(
+            F.col(group_col).cast("string").alias("group"),
+            bucket.alias("bucket"),
+            F.lit(1).alias("n"),
+        )
+
+    return _side_counts(rows(df_a), rows(df_b), ["group"])
+
+
 def _distribution_stats(
     counts: DataFrame,
     keys: list[str],
@@ -106,11 +162,7 @@ def _distribution_stats(
     def share(n: Column, total: Column) -> Column:
         return F.when(total > 0, n / total).otherwise(F.lit(0.0))
 
-    per_key = counts.groupBy(*keys).agg(
-        F.array_sort(F.collect_list(F.struct("bucket", "na", "nb"))).alias("_h"),
-        F.sum("na").alias("n_a"),
-        F.sum("nb").alias("n_b"),
-    )
+    per_key = _per_key_histograms(counts, keys)
     # staged: _p is read by three reductions, _cdf by two output columns
     # (multi-referenced aliases are never inlined — PLANS.md §24)
     p = per_key.select(
@@ -239,18 +291,7 @@ def drift_metrics(
             F.col(c).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_buckets)
         )
 
-    def pairs(df: DataFrame) -> DataFrame:
-        arr = F.array(
-            *[
-                F.struct(F.lit(c).alias("column"), _bucket(c).alias("bucket"))
-                for c in columns
-            ]
-        )
-        return df.select(F.explode(arr).alias("p")).select(
-            "p.column", "p.bucket", F.lit(1).alias("n")
-        )
-
-    counts = _side_counts(pairs(df_a), pairs(df_b), ["column"])
+    counts = _column_counts(df_a, df_b, columns, _bucket)
     return _distribution_stats(
         counts, ["column"], n_buckets, (hi - lo) / n_buckets, eps, 9
     ).select("column", "ks", "psi", "js", "emd")
@@ -289,18 +330,8 @@ def drift_by_group(
     fit a shuffle, which holds for any realistic partition count.
     """
 
-    def pairs(df: DataFrame) -> DataFrame:
-        return df.filter(
-            F.col(group_col).isNotNull() & F.col(column).isNotNull()
-        ).select(
-            F.col(group_col).cast("string").alias("group"),
-            F.width_bucket(
-                F.col(column).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_buckets)
-            ).alias("bucket"),
-            F.lit(1).alias("n"),
-        )
-
-    counts = _side_counts(pairs(df_a), pairs(df_b), ["group"])
+    b = F.width_bucket(F.col(column).cast("double"), F.lit(lo), F.lit(hi), F.lit(n_buckets))
+    counts = _group_counts(df_a, df_b, group_col, b)
     return _distribution_stats(
         counts, ["group"], n_buckets, (hi - lo) / n_buckets, eps, 9
     )
@@ -330,10 +361,11 @@ def categorical_drift(
     - ``tvd`` = ½ Σ |share_a − share_b| — the share of rows that would
       have to change category to equalize the distributions.
 
-    Plan shape: one ``groupBy(column).count()`` scan per side — map-side partial agg, the
-    shuffle moves ≤ n_categories rows per side — then a full-outer join
-    and one aggregate over ≤ n_categories rows. NULL categories are
-    excluded, like the numeric family's null filter.
+    Plan shape: one scan per side feeding one tagged ``groupBy(column,
+    cat)`` over both sides (map-side partial agg — the shuffle moves ≤
+    n_categories rows per map task), then one array reduction over the
+    ≤ n_categories-entry table; no window and no join. NULL categories
+    are excluded, like the numeric family's null filter.
 
     Output: one row ``column, n_categories, chi2, dof, cramers_v, tvd``
     (all-null stats when either side is empty). Intended for bounded-
@@ -361,11 +393,12 @@ def categorical_drift_metrics(
     10^12 rows the scan IS the cost.
 
     Each row explodes into (column, category) pairs (column pruning keeps
-    only the listed columns), one ``groupBy(column, cat)`` builds ALL the
-    contingency tables (map-side partial agg — shuffle volume is the
-    number of distinct (column, category) pairs, independent of row
-    count), per-column totals come from a window partitioned by column,
-    and the statistics reduce the joined histograms per column.
+    only the listed columns), one tagged ``groupBy(column, cat)`` over
+    both sides builds ALL the contingency tables (:func:`_side_counts`;
+    map-side partial agg — shuffle volume is the number of distinct
+    (column, category) pairs, independent of row count), and
+    :func:`_categorical_stats` reduces each column's table as one array,
+    side totals included — no window, no join.
 
     Values are cast to string before counting so heterogeneous columns
     share one explode (distinctness-preserving for the string/int
@@ -379,79 +412,61 @@ def categorical_drift_metrics(
     if not columns:
         raise ValueError("categorical_drift_metrics: columns must be non-empty")
 
-    def hist(df: DataFrame, side: str) -> DataFrame:
-        arr = F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("column"),
-                    F.col(c).cast("string").alias("cat"),
-                )
-                for c in columns
-            ]
-        )
-        return (
-            df.select(F.explode(arr).alias("p"))
-            .select("p.column", "p.cat")
-            .filter(F.col("cat").isNotNull())
-            .groupBy("column", "cat")
-            .agg(F.count(F.lit(1)).alias(f"n{side}"))
-        )
-
-    j = (
-        hist(df_a, "a")
-        .join(hist(df_b, "b"), ["column", "cat"], "full_outer")
-        .select(
-            "column",
-            F.coalesce("na", F.lit(0)).cast("double").alias("na"),
-            F.coalesce("nb", F.lit(0)).cast("double").alias("nb"),
-        )
-    )
-    return _reduce_categorical_stats(j, ["column"])
+    counts = _column_counts(df_a, df_b, columns, lambda c: F.col(c).cast("string"))
+    return _categorical_stats(counts, ["column"]).drop("n_a", "n_b")
 
 
-def _reduce_categorical_stats(
-    j: DataFrame, keys: list[str], extra_aggs: tuple = ()
-) -> DataFrame:
-    """Shared chi²/Cramér's V/TVD reduction over a ``(keys..., na, nb)``
-    category-count join — the ONE implementation of the contingency-table
-    statistics, keyed by column (:func:`categorical_drift_metrics`), by
-    group (:func:`categorical_drift_by_group`), or by window (streaming
-    ``categorical_drift_vs_baseline``). Totals attach via a window
-    partitioned by the keys (≤ n_categories rows per key — an agg +
-    crossJoin would duplicate the histogram subtree; see PLANS.md §21).
-    ``extra_aggs`` prepend to the stat columns (e.g. per-side row
-    counts)."""
-    tot = Window.partitionBy(*keys)
-    enriched = j.select(
+def _categorical_stats(counts: DataFrame, keys: list[str]) -> DataFrame:
+    """The ONE implementation of chi²/Cramér's V/TVD, over a ``(keys...,
+    bucket, na, nb)`` category-count table from :func:`_side_counts` —
+    keyed by column (:func:`categorical_drift_metrics`), by group
+    (:func:`categorical_drift_by_group`) or by window (streaming
+    ``categorical_drift_vs_baseline``). Output: ``keys..., n_a, n_b,
+    n_categories, chi2, dof, cramers_v, tvd`` (statistics rounded to 6
+    digits).
+
+    Each key's contingency table is ≤ n_categories entries, so it is
+    collected into one array (:func:`_per_key_histograms`) and chi² and
+    TVD are each one ``aggregate`` sum over it. A key with no rows on one
+    side has no 2×k table: its statistics are NULL."""
+    ta, tb = F.col("n_a").cast("double"), F.col("n_b").cast("double")
+
+    def chi2_term(x: Column) -> Column:
+        # expected count under homogeneity: E_side = (na+nb) * side_total / N
+        na, nb = x["na"], x["nb"]
+        ea = (na + nb) * ta / (ta + tb)
+        eb = (na + nb) * tb / (ta + tb)
+        return (na - ea) * (na - ea) / ea + (nb - eb) * (nb - eb) / eb
+
+    def tv_term(x: Column) -> Column:
+        return F.abs(x["na"] / ta - x["nb"] / tb)
+
+    def two_sided_sum(term) -> Column:
+        # one empty side -> NULL, not an ANSI divide-by-zero error
+        return F.when(
+            (F.col("n_a") > 0) & (F.col("n_b") > 0),
+            F.aggregate("_h", F.lit(0.0), lambda s, x: s + term(x)),
+        )
+
+    # staged: _chi2 is read by two output columns (multi-referenced
+    # aliases are never inlined — PLANS.md §24)
+    stats = _per_key_histograms(counts, keys).select(
         *keys,
-        "na",
-        "nb",
-        F.count(F.lit(1)).over(tot).alias("k"),
-        F.sum("na").over(tot).alias("ta"),
-        F.sum("nb").over(tot).alias("tb"),
+        "n_a",
+        "n_b",
+        F.size("_h").cast("long").alias("n_categories"),
+        two_sided_sum(chi2_term).alias("_chi2"),
+        (0.5 * two_sided_sum(tv_term)).alias("_tvd"),
     )
-    # expected count under homogeneity: E_side = (na+nb) * side_total / N
-    n_all = F.col("ta") + F.col("tb")
-    ea = (F.col("na") + F.col("nb")) * F.col("ta") / n_all
-    eb = (F.col("na") + F.col("nb")) * F.col("tb") / n_all
-    term = F.when(
-        (F.col("ta") > 0) & (F.col("tb") > 0),
-        (F.col("na") - ea) * (F.col("na") - ea) / ea
-        + (F.col("nb") - eb) * (F.col("nb") - eb) / eb,
-    )
-    # try_divide: an empty side must yield NULL stats, not an ANSI
-    # divide-by-zero error (the chi2 term is already guarded by its WHEN)
-    tv_term = F.abs(
-        F.try_divide(F.col("na"), F.col("ta"))
-        - F.try_divide(F.col("nb"), F.col("tb"))
-    )
-    return enriched.groupBy(*keys).agg(
-        *extra_aggs,
-        F.max("k").alias("n_categories"),
-        F.round(F.sum(term), 6).alias("chi2"),
-        (F.max("k") - 1).alias("dof"),
-        F.round(F.sqrt(F.sum(term) / F.max(n_all)), 6).alias("cramers_v"),
-        F.round(0.5 * F.sum(tv_term), 6).alias("tvd"),
+    return stats.select(
+        *keys,
+        "n_a",
+        "n_b",
+        "n_categories",
+        F.round("_chi2", 6).alias("chi2"),
+        (F.col("n_categories") - 1).alias("dof"),
+        F.round(F.sqrt(F.col("_chi2") / (ta + tb)), 6).alias("cramers_v"),
+        F.round("_tvd", 6).alias("tvd"),
     )
 
 
@@ -464,9 +479,11 @@ def categorical_drift_by_group(
     """Per-group CATEGORICAL drift localization — chi²/Cramér's V/TVD for
     every group in one scan per side, the categorical counterpart of
     :func:`drift_by_group` (which localizes numeric drift). Same plan
-    contract: ``groupBy(group, cat)`` per side with map-side partial
-    aggregation (shuffle ≤ n_groups × n_categories rows), then the shared
-    reducer keyed by group.
+    contract: one tagged ``groupBy(group, cat)`` over both sides with
+    map-side partial aggregation (shuffle ≤ n_groups × n_categories rows
+    per map task), then the shared array reduction keyed by group
+    (:func:`_categorical_stats`, whose side totals are ``n_a``/``n_b``);
+    no window and no join.
 
     A group present on only one side gets NULL stats (a contingency table
     needs both samples — unlike EMD there is no meaningful chi² for
@@ -477,35 +494,8 @@ def categorical_drift_by_group(
     n_categories, chi2, dof, cramers_v, tvd``.
     """
 
-    def hist(df: DataFrame, side: str) -> DataFrame:
-        return (
-            df.filter(
-                F.col(group_col).isNotNull() & F.col(column).isNotNull()
-            )
-            .groupBy(
-                F.col(group_col).cast("string").alias("group"),
-                F.col(column).cast("string").alias("cat"),
-            )
-            .agg(F.count(F.lit(1)).alias(f"n{side}"))
-        )
-
-    j = (
-        hist(df_a, "a")
-        .join(hist(df_b, "b"), ["group", "cat"], "full_outer")
-        .select(
-            "group",
-            F.coalesce("na", F.lit(0)).cast("double").alias("na"),
-            F.coalesce("nb", F.lit(0)).cast("double").alias("nb"),
-        )
-    )
-    return _reduce_categorical_stats(
-        j,
-        ["group"],
-        extra_aggs=(
-            F.sum("na").cast("long").alias("n_a"),
-            F.sum("nb").cast("long").alias("n_b"),
-        ),
-    )
+    counts = _group_counts(df_a, df_b, group_col, F.col(column).cast("string"))
+    return _categorical_stats(counts, ["group"])
 
 
 def category_histogram(df: DataFrame, column: str) -> DataFrame:

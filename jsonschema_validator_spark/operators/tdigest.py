@@ -216,7 +216,8 @@ def tdigest_sketches(
             for pkey, grp in parts:
                 for c in cols:
                     v = grp[c].to_numpy(dtype=np.float64)
-                    v = v[~np.isnan(v)]
+                    # the digest keeps only finite values; count the same set
+                    v = v[np.isfinite(v)]
                     if v.size == 0:
                         continue
                     rows.append(

@@ -21,6 +21,10 @@ Split into the two pieces Structured Streaming actually allows:
    (operators/drift._side_counts / _distribution_stats), so batch and
    streaming statistics cannot diverge. It runs on the drained sink (or
    with ``foreachBatch``); its input is sketch-sized, never row-scale.
+   :func:`windowed_category_counts` / :func:`categorical_drift_vs_baseline`
+   are the categorical pair (operators/drift._categorical_stats). Each
+   reducer's one join is the baseline-under-every-window cross join
+   (:func:`_baseline_grid`); neither has a window.
 
 At 10^12 rows: the stream only ever shuffles histogram increments; the
 drift math touches n_windows × n_buckets rows. Gated end-to-end by the
@@ -34,10 +38,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from jsonschema_validator_spark.operators.drift import (
+    _categorical_stats,
     _distribution_stats,
-    _reduce_categorical_stats,
     _side_counts,
 )
+
+
+def _baseline_grid(win: DataFrame, baseline: DataFrame) -> DataFrame:
+    """``window_start, bucket, n``: the baseline's ``bucket, n`` rows under
+    EVERY window of ``win`` — otherwise a bucket or category the window
+    lost entirely would drop out of that window's comparison."""
+    return win.select("window_start").distinct().crossJoin(baseline.select("bucket", "n"))
 
 
 def windowed_histograms(
@@ -80,14 +91,7 @@ def drift_vs_baseline(
     operators/drift.drift_metrics between the baseline rows (side a) and
     that window's rows (side b).
     """
-    # the baseline rows must appear under EVERY window, or a bucket the
-    # window lost entirely would drop out of its CDF and PSI
-    base = (
-        win_hist.select("window_start")
-        .distinct()
-        .crossJoin(baseline_hist.select("bucket", "n"))
-    )
-    counts = _side_counts(base, win_hist, ["window_start"])
+    counts = _side_counts(_baseline_grid(win_hist, baseline_hist), win_hist, ["window_start"])
     # EMD is not reported here, so its grid size and bucket width are moot
     return _distribution_stats(
         counts, ["window_start"], 0, 0.0, eps, round_to
@@ -126,9 +130,9 @@ def categorical_drift_vs_baseline(
     """Per-window categorical drift vs a baseline (batch stage over the
     drained sink): each window's category counts form a 2×k contingency
     table with the baseline's — the same homogeneity chi² / Cramér's V /
-    TVD as operators/drift.categorical_drift, with the SAME shared
-    reducer (_reduce_categorical_stats keyed by window), so the batch and
-    streaming statistics cannot diverge.
+    TVD as operators/drift.categorical_drift, through the SAME side-count
+    aggregate and array reduction (_side_counts, _categorical_stats keyed
+    by window), so the batch and streaming statistics cannot diverge.
 
     ``win_counts``: ``window_start long, cat, n`` (cast ``window.start``
     to long before calling — the drained-sink shape).
@@ -139,20 +143,16 @@ def categorical_drift_vs_baseline(
     Input is sketch-sized (n_windows × n_categories rows), never
     row-scale.
     """
-    # category grid per window = baseline cats ∪ window cats (the
-    # baseline rows must appear under EVERY window, or a category the
-    # window lost entirely would vanish from its table)
-    grid = (
-        win_counts.select("window_start")
-        .distinct()
-        .crossJoin(baseline_counts.select("cat", F.col("n").alias("n_base")))
+
+    def by_bucket(df: DataFrame) -> DataFrame:
+        return df.withColumnRenamed("cat", "bucket")
+
+    counts = _side_counts(
+        _baseline_grid(win_counts, by_bucket(baseline_counts)),
+        by_bucket(win_counts),
+        ["window_start"],
     )
-    j = grid.join(win_counts, ["window_start", "cat"], "full_outer").select(
-        "window_start",
-        F.coalesce("n_base", F.lit(0)).cast("double").alias("na"),
-        F.coalesce("n", F.lit(0)).cast("double").alias("nb"),
-    )
-    return _reduce_categorical_stats(j, ["window_start"])
+    return _categorical_stats(counts, ["window_start"]).drop("n_a", "n_b")
 
 
 __all__ = [

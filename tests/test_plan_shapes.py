@@ -370,19 +370,30 @@ def test_curation_funnel_stats_single_scan(spark):
 
 
 def test_categorical_drift_shuffles_counts_not_rows(spark):
-    """categorical_drift: each side is ONE scan feeding a partial+final
-    count aggregate — the shuffle moves <= n_categories rows per side,
-    never raw rows (PLANS.md §21). The stack/explode unpivot in the driver
+    """categorical_drift: each side is ONE scan feeding one partial+final
+    count aggregate over both sides — the shuffle moves <= n_categories
+    rows per map task, never raw rows (PLANS.md §21). The stack/explode unpivot in the driver
     query must sit ABOVE the aggregates, so each statistic computes once."""
     from jsonschema_validator_spark.operators.drift import categorical_drift
 
     df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     a = df.filter(F.col("l_orderkey") % 2 == 0)
     b = df.filter(F.col("l_orderkey") % 2 == 1)
-    plan = _plan(categorical_drift(a, b, "l_returnflag"))
+    out = categorical_drift(a, b, "l_returnflag")
+    plan = _plan(out)
     assert _op_count(plan, "Scan parquet") == 2  # side a + side b
-    # each side: partial HashAggregate below its exchange (map-side combine)
-    assert _op_count(plan, "HashAggregate") >= 4
+    # the (column, bucket) count exchange sits directly on the partial
+    # HashAggregate (map-side combine), so rows never cross the shuffle
+    out.collect()
+    lines = _final_plan(out).splitlines()
+    on_counts = [
+        i for i, l in enumerate(lines)
+        if "Exchange hashpartitioning(" in l
+        and re.findall(r"(\w+)#\d+", l.split("hashpartitioning(", 1)[1]) == ["column", "bucket"]
+    ]
+    assert len(on_counts) == 1, lines
+    child = lines[on_counts[0] + 1]
+    assert "HashAggregate(" in child and "partial_sum(" in child, lines
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     assert "l_returnflag" in read_schema
     assert "l_comment" not in read_schema and "l_extendedprice" not in read_schema
@@ -483,30 +494,55 @@ def test_image_suite_only_python_stage_is_the_decode(spark, tmp_path):
     assert _PYTHON_NODE.findall(final) == ["MapInArrow"], final
 
 
-_NUMERIC_DRIFT = {
+_DRIFT = {
     "drift_metrics": lambda d, a, b: d.drift_metrics(a, b, ["l_quantity"], 0.5, 50.5, 50),
     "drift_by_group": lambda d, a, b: d.drift_by_group(
         a, b, "l_returnflag", "l_quantity", 0.5, 50.5, 50
     ),
+    "categorical_drift_metrics": lambda d, a, b: d.categorical_drift_metrics(
+        a, b, ["l_returnflag", "l_linestatus"]
+    ),
+    "categorical_drift_by_group": lambda d, a, b: d.categorical_drift_by_group(
+        a, b, "l_returnflag", "l_linestatus"
+    ),
 }
 
 
-@pytest.mark.parametrize("name", sorted(_NUMERIC_DRIFT))
-def test_numeric_drift_one_aggregate_one_reduction(spark, name):
-    """Numeric drift is one tagged side-count aggregate plus one array
-    reduction per key: at most two shuffles, and no window or join over
-    the histograms."""
+@pytest.mark.parametrize("name", sorted(_DRIFT))
+def test_drift_one_aggregate_one_reduction(spark, name):
+    """Numeric and categorical drift are each one tagged side-count
+    aggregate plus one array reduction per key: at most two shuffles, and
+    no window or join over the histograms."""
     from jsonschema_validator_spark.operators import drift
 
     df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     a = df.filter(F.col("l_orderkey") % 2 == 0)
     b = df.filter(F.col("l_orderkey") % 2 == 1)
-    out = _NUMERIC_DRIFT[name](drift, a, b)
+    out = _DRIFT[name](drift, a, b)
     out.collect()
     final = _final_plan(out)
     assert not re.search(r"\bWindow\b", final), final
     assert "Join" not in final, final
     assert len(re.findall(r"\bExchange\b", final)) <= 2, final
+
+
+def test_categorical_drift_vs_baseline_one_join_no_window(spark):
+    """The streaming categorical reducer shares the batch plan: the only
+    join is the baseline-under-every-window cross join, and no window
+    attaches totals."""
+    from jsonschema_validator_spark.operators.drift import category_histogram
+    from jsonschema_validator_spark.streaming.drift import categorical_drift_vs_baseline
+
+    df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    win = df.groupBy(
+        (F.col("l_orderkey") % 5).cast("long").alias("window_start"),
+        F.col("l_returnflag").alias("cat"),
+    ).agg(F.count(F.lit(1)).alias("n"))
+    out = categorical_drift_vs_baseline(win, category_histogram(df, "l_returnflag"))
+    assert len(out.collect()) == 5
+    final = _final_plan(out)
+    assert not re.search(r"\bWindow\b", final), final
+    assert len(re.findall(r"\w*Join\b|CartesianProduct", final)) == 1, final
 
 
 _GRAY = np.full((8, 8, 3), 90, np.uint8)

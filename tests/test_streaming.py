@@ -423,12 +423,12 @@ def test_streaming_windowed_categorical_drift_end_to_end(spark, tmp_path):
         df_base = spark.createDataFrame(
             [(c,) for c, n in baseline.items() for _ in range(n)], "fmt string"
         )
-        out = {
-            r["window_start"]: r
-            for r in categorical_drift_vs_baseline(
-                win, category_histogram(df_base, "fmt")
-            ).collect()
-        }
+        res = categorical_drift_vs_baseline(win, category_histogram(df_base, "fmt"))
+        assert res.schema.simpleString() == (
+            "struct<window_start:bigint,n_categories:bigint,chi2:double,"
+            "dof:bigint,cramers_v:double,tvd:double>"
+        )
+        out = {r["window_start"]: r for r in res.collect()}
         assert len(out) == 2
         for start, day in zip(sorted(out), (day1, day2)):
             df_day = spark.createDataFrame(

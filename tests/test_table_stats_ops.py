@@ -336,10 +336,12 @@ class TestCategoricalDriftMetrics:
         rows_b = [("jpeg", "en"), ("webp", "zh"), ("png", "zh"), ("jpeg", "de")] * 50
         da = spark.createDataFrame(rows_a, "fmt string, lang string")
         db = spark.createDataFrame(rows_b, "fmt string, lang string")
-        multi = {
-            r["column"]: r
-            for r in categorical_drift_metrics(da, db, ["fmt", "lang"]).collect()
-        }
+        out = categorical_drift_metrics(da, db, ["fmt", "lang"])
+        assert out.schema.simpleString() == (
+            "struct<column:string,n_categories:bigint,chi2:double,dof:bigint,"
+            "cramers_v:double,tvd:double>"
+        )
+        multi = {r["column"]: r for r in out.collect()}
         assert set(multi) == {"fmt", "lang"}
         for c in ("fmt", "lang"):
             single = categorical_drift(da, db, c).collect()[0]
@@ -403,10 +405,12 @@ class TestCategoricalDriftByGroup:
             + [("g3", "webp")] * 20
         da = spark.createDataFrame(rows_a, "g string, fmt string")
         db = spark.createDataFrame(rows_b, "g string, fmt string")
-        out = {
-            r["group"]: r
-            for r in categorical_drift_by_group(da, db, "g", "fmt").collect()
-        }
+        res = categorical_drift_by_group(da, db, "g", "fmt")
+        assert res.schema.simpleString() == (
+            "struct<group:string,n_a:bigint,n_b:bigint,n_categories:bigint,"
+            "chi2:double,dof:bigint,cramers_v:double,tvd:double>"
+        )
+        out = {r["group"]: r for r in res.collect()}
         assert set(out) == {"g1", "g2", "g3"}
         for g in ("g1", "g2"):
             ref = categorical_drift(

@@ -95,3 +95,19 @@ def test_spark_pipeline_partition_merge(spark):
     for i, p in enumerate((0.25, 0.5, 0.75)):
         e = exact[f"e{i}"]
         assert abs(est[("l_extendedprice", p)] - e) <= 0.01 * abs(e)
+
+
+def test_spark_n_values_counts_only_digested_values(spark):
+    """``n_values`` counts exactly the values the digest holds: NULL, NaN
+    and +/-inf are all dropped, and a partition with no finite value gets
+    no row."""
+    from jsonschema_validator_spark.operators.tdigest import tdigest_sketches
+
+    inf = float("inf")
+    rows = [("a", v) for v in (1.0, 2.0, inf, -inf, float("nan"), None)]
+    rows += [("b", v) for v in (inf, float("nan"), None)]
+    df = spark.createDataFrame(rows, "p string, x double")
+    out = tdigest_sketches(df, ["x"], partition_col="p").collect()
+    assert [r["partition"] for r in out] == ["a"]
+    weight = td.deserialize(out[0]["sketch"])[1].sum()
+    assert out[0]["n_values"] == weight == 2
