@@ -769,12 +769,10 @@ def q_documents_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds 2-3: same operators, same oracle expressions, one scan instead
     of four — and it frees driver-gate slots (the driver verifies at most
     50 queries). Round 4 adds the Gopher-style repetition signals
-    (top_{1,2,3}gram_frac — text.with_repetition_columns) via STAGED
-    projections: the inline struct form recomputes the tokenize/gram
-    subtrees per field and, because higher-order functions are
-    CodegenFallback, gets no CSE — measured 17 s vs ~1.5 s staged on the
-    sf0.1 corpus. Still one scan, zero shuffles (stacked map-stage
-    projections)."""
+    (top_{1,2,3}gram_frac — text.with_repetition_columns, a projection of
+    repetition_struct whose token and gram arrays are let-bound, so each
+    row is tokenized once: higher-order functions are CodegenFallback and
+    get no CSE, PLANS.md §24). Still one scan, zero shuffles."""
     from jsonschema_validator_spark.operators.dedup import _fingerprint
     from jsonschema_validator_spark.operators.text import (
         bpe_ish_token_count,
@@ -1830,8 +1828,8 @@ def q_streaming_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice (doc_id % 97 == 0, the corpus_curation_funnel stage-6 benchmark)
     is materialized once as a closure-shipped shingle set, then ALL
     non-null-text documents are replayed as a TWO micro-batch file stream
-    through ``streaming_contamination_flags`` — stateless Arrow-batched
-    mapInPandas, no shuffle, no watermark (the right streaming shape for a
+    through ``streaming_contamination_flags`` — JVM shingles, then one
+    stateless mapInArrow set probe, no shuffle, no watermark (the right streaming shape for a
     per-document statistic against a static eval set; see
     streaming/decontaminate.py). Output is each document's full overlap
     measurement ``(n_shingles, n_matched, contamination_frac,
@@ -1864,7 +1862,7 @@ def q_streaming_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             [r for r in rows if r["doc_id"] >= cut], docs.schema,
             os.path.join(root, "b1.parquet"), 1,
         )
-        # stateless mapInPandas: no state store, so no state_partitions
+        # stateless mapInArrow: no state store, so no state_partitions
         # pinning — there is no shuffle in this stream at all
         stream = (
             spark.readStream.schema(docs.schema)
@@ -3276,7 +3274,8 @@ SELECT doc_id, text FROM r WHERE rn = 1
 # shingles), exposed per document with the full fraction instead of the
 # funnel's count-only gate. round() parity: contamination_frac is
 # HALF_UP-rounded at 6 dp on both sides (the engine-wide F.round
-# convention; decontaminate._round6 replicates it in the stream twin).
+# convention; the stream twin rounds with the batch operator's own
+# dedup._contamination_flags).
 _STREAM_DECON_SQL = """
 WITH bsh AS (
   SELECT CASE WHEN len(t) < 5 THEN [array_to_string(t, ' ')]

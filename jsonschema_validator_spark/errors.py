@@ -65,11 +65,6 @@ def go_num_col(col: Column) -> Column:
     )
 
 
-def value_str_col(col: Column) -> Column:
-    """Stringified offending value for the violation row's ``value`` field."""
-    return col.cast("string")
-
-
 # ---------------------------------------------------------------------------
 # error formatting modes (errors/errors.go:9-108)
 # ---------------------------------------------------------------------------

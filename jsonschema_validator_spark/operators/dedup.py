@@ -7,11 +7,11 @@ across runs AND portable to the DuckDB oracle.
 
 Scale design:
 - exact dedup: one hash-groupBy (partial agg map-side).
-- MinHash: signatures via ``transform`` over the shingle array (JVM-side,
-  no UDF); LSH banding turns all-pairs O(n²) into per-bucket candidate
-  pairs — the join key is (band, band_hash), so the shuffle is balanced
-  unless a bucket is hot (degenerate shingles), which the band-hash salt
-  bounds.
+- MinHash: per-doc ``min(xxhash64)`` aggregates over the exploded
+  shingles (JVM-side, no UDF); LSH banding turns all-pairs O(n²) into
+  per-bucket candidate pairs — the join key is (band, band_hash), so the
+  shuffle is balanced unless a bucket is hot (degenerate shingles), which
+  the band-hash salt bounds.
 - SimHash: 64-bit signature from per-shingle xxhash bits, hamming-adjacent
   buckets via bit-slices.
 """
@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from jsonschema_validator_spark.operators.columns import let
 
 
 def _norm(t: Column) -> Column:
@@ -89,38 +91,21 @@ def exact_duplicates(
 
 
 def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles of the canonicalized text (JVM-side)."""
-    toks = F.split(_norm(text), " ")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.array_distinct(
-        F.when(n < k, F.array(F.array_join(toks, " "))).otherwise(
-            F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " "))
+    """Distinct k-word shingles of the canonicalized text (JVM-side); the
+    whole text is one shingle when it has fewer than ``k`` words. The
+    tokens are let-bound, so the text is tokenized once per row, not once
+    per shingle."""
+
+    def shingles(toks: Column) -> Column:
+        n = F.size(toks)
+        idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
+        return F.array_distinct(
+            F.when(n < k, F.array(F.array_join(toks, " "))).otherwise(
+                F.transform(idx, lambda i: F.array_join(F.slice(toks, i, k), " "))
+            )
         )
-    )
 
-
-def minhash_signature(shingles: Column, n_hashes: int = 64) -> Column:
-    """MinHash signature as a single Column: for seed s, min over shingles
-    of xxhash64(shingle, s). Array algebra; fine for FEW hashes. For the
-    64-hash production path use :func:`minhash_signatures` — this per-row
-    form evaluates n_hashes passes over the shingle array per row, which
-    blows past the codegen method-size limit and drops whole queries into
-    interpreted mode (measured 30× slowdown).
-
-    NOTE: higher-order-function lambdas must be unary — PySpark binds a
-    2-arg lambda as (element, index) — so seeds are captured via a closure
-    factory, never default args."""
-
-    def _hash_with_seed(s: int):
-        return lambda sh: F.xxhash64(sh, F.lit(s))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _hash_with_seed(s)))
-            for s in range(n_hashes)
-        ]
-    )
+    return let(F.split(_norm(text), " "), shingles)
 
 
 def minhash_signatures(
@@ -132,13 +117,15 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-doc MinHash signature via explode + grouped min-aggregates.
 
-    Shape: one scan → explode shingles → n_hashes ``min(xxhash64(s, seed))``
-    aggregates per doc. The shuffle is keyed by doc (balanced: shingle
-    counts are bounded by doc length), partial aggregation collapses it
-    map-side, and every expression stays inside whole-stage codegen —
-    unlike the per-row array form whose 64 array passes exceed the codegen
-    limits. Output: ``_id, _h0.._h{n-1}``. Docs with NULL text are dropped
-    (no content ⇒ no signature ⇒ no candidate pairs).
+    Shape: one scan → explode :func:`word_shingles` (each doc tokenized
+    once) → n_hashes ``min(xxhash64(s, seed))`` aggregates per doc. The
+    shuffle is keyed by doc (balanced: shingle counts are bounded by doc
+    length), partial aggregation collapses it map-side, and the hash
+    aggregates stay inside whole-stage codegen — a per-row array form
+    (n_hashes passes over the shingle array) exceeds the codegen
+    method-size limit and measured 30× slower. Output:
+    ``_id, _h0.._h{n-1}``. Docs with NULL text are dropped (no content ⇒
+    no signature ⇒ no candidate pairs).
     """
     ex = _spread_small_input(
         # the drop the docstring promises must be enforced here:
@@ -344,14 +331,18 @@ def ngram_contamination(
             F.count("_bh").alias("n_matched"),
         )
     )
-    frac = F.round(F.col("n_matched") / F.col("n_shingles"), 6)
     return agg.select(
-        "doc_id",
-        "n_shingles",
-        "n_matched",
-        frac.alias("contamination_frac"),
-        (frac >= threshold).alias("contaminated"),
+        "doc_id", "n_shingles", "n_matched", *_contamination_flags(threshold)
     )
+
+
+def _contamination_flags(threshold: float) -> list[Column]:
+    """``contamination_frac`` (``n_matched / n_shingles`` rounded to 6 dp)
+    and ``contaminated`` (that rounded fraction at/above ``threshold``)
+    over a frame holding ``n_shingles`` and ``n_matched`` — shared by this
+    operator and its streaming twin."""
+    frac = F.round(F.col("n_matched") / F.col("n_shingles"), 6)
+    return [frac.alias("contamination_frac"), (frac >= threshold).alias("contaminated")]
 
 
 def simhash(

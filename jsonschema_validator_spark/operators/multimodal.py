@@ -17,7 +17,7 @@ Two helpers own the Python (Arrow) boundary:
 pandas compare.
 
 The byte→pixel codecs live in sources/codecs.py (PNG subset, real T.81
-JPEG, legacy stub lossy codecs), sources/avi.py (MJPEG AVI) and
+JPEG, the FDCT lossy codec), sources/avi.py (MJPEG AVI) and
 sources/wav.py (RIFF/WAVE), all pure numpy.
 
 Scale notes:

@@ -25,6 +25,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from jsonschema_validator_spark.operators.columns import let
+
 
 def _darray_sql(vals) -> str:
     parts = []
@@ -211,16 +213,9 @@ def _probe_structs(
         ]
     )
 
-    def _let(val: Column, body) -> Column:
-        # let-binding idiom: transform binds `val` to a lambda variable, so
-        # the body can reference it MANY times while it is EVALUATED ONCE
-        # per row (the previous build referenced each dot subtree from the
-        # bucket, the margins AND every flip — n_probes+1 evaluations of
-        # every 64-dim fold per row — and re-CONSTRUCTED the whole tree per
-        # table: 3.8 s of driver py4j chatter at 8 tables before any Spark
-        # work, since lambda bodies here are built once, not per element)
-        return F.element_at(F.transform(F.array(val), body), 1)
-
+    # each dot subtree is let-bound: referenced from the bucket, the margins
+    # and every flip, it would otherwise be evaluated n_probes+1 times per
+    # row and re-built per table (3.8 s of driver py4j chatter at 8 tables)
     def with_vec(vv: Column) -> Column:
         def per_table(planes_t: Column, t: Column) -> Column:
             def with_dots(ds: Column) -> Column:
@@ -260,15 +255,15 @@ def _probe_structs(
                         ),
                     )
 
-                return _let(b0, with_bucket)
+                return let(b0, with_bucket)
 
-            return _let(F.transform(planes_t, lambda p: dot(vv, p)), with_dots)
+            return let(F.transform(planes_t, lambda p: dot(vv, p)), with_dots)
 
         tables = F.transform(planes_lit, per_table)
         return F.element_at(tables, 1) if n_tables == 1 else F.flatten(tables)
 
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return _let(v, with_vec)
+    return let(v, with_vec)
 
 
 def lsh_probe_buckets(

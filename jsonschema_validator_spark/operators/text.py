@@ -1,14 +1,17 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-All pure Column expressions (JVM-side, codegen) — no Python UDFs in any hot
-path. Designed for the ``documents`` table shape ``(doc_id, text, lang,
-source, n_chars)`` but column names are parameters.
+All pure Column expressions (JVM-side) — no Python UDFs in any hot path.
+Designed for the ``documents`` table shape ``(doc_id, text, lang, source,
+n_chars)`` but column names are parameters.
 
 Operators:
 - token counting: whitespace tokens + a BPE-ish subword proxy count
 - quality scoring: length / punctuation / stopword / repetition signals
+- repetition: Gopher-style top-n-gram fractions, each row tokenized once
 - language ID: stopword-hit n-gram heuristic over a small built-in lexicon
-- document fingerprinting: deterministic 64-bit content fingerprint
+- PII scan/redaction, token budgets and quality-threshold retention curves
+
+The canonical content fingerprint is ``dedup._fingerprint``.
 """
 
 from __future__ import annotations
@@ -17,6 +20,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from jsonschema_validator_spark.operators.columns import let
 
 # tiny built-in stopword lexicons for the langid heuristic
 LANG_LEXICON: dict[str, list[str]] = {
@@ -114,20 +119,14 @@ def _word_ngrams(toks: Column, n: int) -> Column:
     )
 
 
-def _top_ngram_frac(toks: Column, n: int) -> Column:
-    """Fraction of word n-grams accounted for by the single most frequent
-    n-gram (rounded to 6 dp; 0.0 when fewer than ``n`` tokens).
+def _top_gram_frac(grams: Column) -> Column:
+    """Fraction of ``grams`` taken by its single most frequent gram,
+    rounded to 6 dp; 0.0 when there are no grams.
 
-    Pure Column algebra, O(n log n) per row: sort the grams, then ONE
-    ``aggregate`` pass tracks the longest equal-run (= the mode count).
-    The obvious nested transform/filter form is O(n²) string comparisons
-    per row — trivial on test docs but ~10^8 comparisons for a 10k-token
-    document, which is a per-row scale killer on a real corpus. No UDF,
-    no shuffle. NOTE: higher-order functions are CodegenFallback, so the
-    containing projection is interpreted — callers must not duplicate the
-    gram subtrees (see :func:`with_repetition_columns` / PLANS.md §24).
-    """
-    grams = _word_ngrams(toks, n)
+    O(n log n) per row: sort the grams, then ONE ``aggregate`` pass tracks
+    the longest equal-run (= the mode count). The nested transform/filter
+    form is O(n²) string comparisons per row, ~10^8 for a 10k-token
+    document."""
     # a BLANK document tokenizes to [''] (split('') keeps one empty
     # token), which for n=1 is a one-gram array — the documented
     # "0 tokens → 0.0" contract requires treating it as empty. A
@@ -166,102 +165,40 @@ def repetition_struct(t: Column, max_n: int = 3) -> Column:
 
     Tokenization matches :func:`quality_struct` (lowercase, trim, split on
     whitespace) so the signals compose with the quality family in the same
-    single-scan projection.
-
-    NOTE (hot paths): this inline form duplicates the tokenize/gram
-    subtrees across the struct fields and higher-order functions are
-    CodegenFallback, so large corpora pay ~13x over the staged twin —
-    use :func:`with_repetition_columns` when profiling whole tables.
+    single-scan projection. The token array and each gram array are
+    let-bound, so a row is tokenized once and each gram array built once
+    (PLANS.md §24). NULL text gives NULL for every n; blank text gives 0.0.
     """
-    toks = F.split(F.lower(F.trim(t)), _WS)
-    return F.struct(
-        *[
-            _top_ngram_frac(toks, n).alias(f"top_{n}gram_frac")
-            for n in range(1, max_n + 1)
-        ]
-    )
+
+    def per_tokens(toks: Column) -> Column:
+        # NULL text splits to NULL tokens, whose n≥2 "grams" would be
+        # [NULL]: one gram, counted as fully repetitive
+        return F.struct(
+            *[
+                F.when(toks.isNotNull(), let(_word_ngrams(toks, n), _top_gram_frac))
+                .alias(f"top_{n}gram_frac")
+                for n in range(1, max_n + 1)
+            ]
+        )
+
+    return let(F.split(F.lower(F.trim(t)), _WS), per_tokens)
 
 
 def with_repetition_columns(
     df: DataFrame, text_col: str = "text", max_n: int = 3
 ) -> DataFrame:
-    """Append ``top_{n}gram_frac`` columns (same values as
-    :func:`repetition_struct`) via STAGED projections — the fast form for
-    hot paths.
-
-    Why staged: the inline struct form duplicates the expensive
-    tokenize/transform subtrees (the token split appears once per n-gram
-    order, each gram array twice), and because higher-order functions are
-    CodegenFallback the projection loses whole-stage codegen — so there is
-    no CSE and every duplicate subtree is re-evaluated per row (measured
-    ~13x slower on the sf0.1 documents corpus: 15.5 s inline vs 1.2 s
-    staged). Chained selects materialize each intermediate exactly once
-    per row: Catalyst's CollapseProject never inlines an alias that is
-    expensive and referenced more than once, so the boundaries below are
-    stable plan shapes, not an optimizer accident. Still zero shuffles —
-    four stacked map-stage projections over one scan.
-    """
+    """``df`` with the ``top_{n}gram_frac`` fields of
+    :func:`repetition_struct` appended as columns. One projection over
+    ``df``, no shuffle."""
     cols = [F.col(c) for c in df.columns]
-    ns = range(1, max_n + 1)
-    toks = F.split(F.lower(F.trim(F.col(text_col))), _WS)
-    s1 = df.select(*cols, toks.alias("_rep_toks"))
-    s2 = s1.select(
-        *cols,
-        *[_word_ngrams(F.col("_rep_toks"), n).alias(f"_g{n}") for n in ns],
-    )
-    zero = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("best"),
-    )
-
-    def step(acc: Column, x: Column) -> Column:
-        new_run = F.when(acc["prev"].eqNullSafe(x), acc["run"] + 1).otherwise(
-            F.lit(1)
-        )
-        return F.struct(
-            x.alias("prev"),
-            new_run.alias("run"),
-            F.greatest(acc["best"], new_run).alias("best"),
-        )
-
-    s3 = s2.select(
-        *cols,
-        *[
-            F.aggregate(F.array_sort(F.col(f"_g{n}")), zero, step, lambda a: a["best"]).alias(
-                f"_m{n}"
-            )
-            for n in ns
-        ],
-        # blank docs tokenize to [''] → a one-gram array at n=1; treat it
-        # as empty (same guard as the inline _top_ngram_frac)
-        *[
-            F.when(
-                (F.size(F.col(f"_g{n}")) == 1)
-                & (F.element_at(F.col(f"_g{n}"), 1) == ""),
-                F.lit(0),
-            )
-            .otherwise(F.size(F.col(f"_g{n}")))
-            .alias(f"_t{n}")
-            for n in ns
-        ],
-    )
-    return s3.select(
-        *cols,
-        *[
-            F.when(F.col(f"_t{n}") <= 0, F.lit(0.0))
-            .otherwise(F.round(F.col(f"_m{n}") / F.col(f"_t{n}"), 6))
-            .alias(f"top_{n}gram_frac")
-            for n in ns
-        ],
-    )
+    rep = repetition_struct(F.col(text_col), max_n).alias("_rep")
+    return df.select(*cols, rep).select(*cols, "_rep.*")
 
 
 def repetition_metrics(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", max_n: int = 3
 ) -> DataFrame:
-    """Per-document repetition metrics (see :func:`repetition_struct`);
-    computed via the staged :func:`with_repetition_columns` plan."""
+    """Per-document repetition metrics (see :func:`repetition_struct`)."""
     out = with_repetition_columns(df, text_col, max_n)
     return out.select(id_col, *[f"top_{n}gram_frac" for n in range(1, max_n + 1)])
 
@@ -368,24 +305,6 @@ def pii_scan(
         red = F.regexp_replace(red, pats[name], safe_token)
     cols.append(red.alias("redacted_text"))
     return df.select(*cols)
-
-
-def fingerprint(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", normalize: bool = True
-) -> DataFrame:
-    """Deterministic 64-bit content fingerprint (16 hex chars).
-
-    Normalization (lowercase, collapse whitespace) makes it a *canonical*
-    fingerprint: whitespace/case variants collide intentionally, which is
-    what exact-dedup wants. The fingerprint is the first 16 hex digits of
-    md5 — kept as hex text so it is portable to any engine byte-for-byte
-    (the DuckDB oracle uses the identical expression).
-    """
-    t = F.col(text_col)
-    if normalize:
-        t = F.regexp_replace(F.lower(F.trim(t)), _WS, " ")
-    fp = F.substring(F.md5(t), 1, 16)
-    return df.select(F.col(id_col), fp.alias("fingerprint"))
 
 
 def corpus_token_budget(

@@ -15,8 +15,6 @@ The sandbox has no PIL/opencv, so the image payloads use:
   its SOI marker. The bulk bench corpus stays on FDCT because JPEG's
   entropy layer is inherently bit-serial (a Python loop per coefficient);
   FDCT shares the same DCT-quantization loss model with vectorized I/O.
-- **fake-JPEG** (``FJPG``): the round-1 6-bit-quantization stand-in, kept
-  decodable for payloads already on disk.
 
 All functions are numpy-vectorized (they run inside Arrow-batched pandas
 UDFs — never per-pixel Python loops).
@@ -30,7 +28,6 @@ import zlib
 import numpy as np
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-FJPG_MAGIC = b"FJPG"  # stub lossy container
 
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
@@ -205,8 +202,7 @@ def _to_rgb(px: np.ndarray, ctype: int) -> np.ndarray:
 # bitstream container — the container needs libjpeg/PIL, which this runtime
 # lacks. The loss is genuine frequency-domain quantization, so the
 # PSNR≥40dB invariant is exercised against real transform loss, not a
-# bit-truncation stand-in. decode_fjpg (the old 6-bit stub) remains for
-# payloads already on disk.
+# bit-truncation stand-in.
 # ---------------------------------------------------------------------------
 
 FDCT_MAGIC = b"FDCT"
@@ -286,28 +282,6 @@ def decode_fdct(data: bytes) -> np.ndarray:
     return out
 
 
-def encode_fjpg(pixels: np.ndarray) -> bytes:
-    """STUB lossy codec: 6-bit channel quantization in a trivial container.
-
-    Deterministic; reconstruction error ≤ 2/255 per channel ⇒ PSNR ≈ 44 dB.
-    Stands in for JPEG until a real decoder is available in the runtime.
-    """
-    h, w, c = pixels.shape
-    q = (pixels >> 2).astype(np.uint8)  # keep top 6 bits
-    return FJPG_MAGIC + struct.pack(">II", w, h) + zlib.compress(q.tobytes(), 6)
-
-
-def decode_fjpg(data: bytes) -> np.ndarray:
-    if data[:4] != FJPG_MAGIC:
-        raise ValueError("not a FJPG")
-    w, h = struct.unpack(">II", data[4:12])
-    q = np.frombuffer(zlib.decompress(data[12:]), dtype=np.uint8)
-    if q.size != h * w * 3:
-        raise ValueError("corrupt FJPG payload")
-    # dequantize to bucket midpoint: q*4 + 2 (max error 2)
-    return (q.reshape(h, w, 3) << 2) + 2
-
-
 def decode_image(data: bytes) -> np.ndarray:
     """Dispatch on magic. Raises ValueError on corrupt/unknown payloads."""
     if data is None or len(data) < 8:
@@ -317,8 +291,6 @@ def decode_image(data: bytes) -> np.ndarray:
             return decode_png(data)
         if data[:4] == FDCT_MAGIC:
             return decode_fdct(data)
-        if data[:4] == FJPG_MAGIC:
-            return decode_fjpg(data)
         if data[:2] == b"\xff\xd8":  # JPEG SOI — real T.81 bitstream
             from jsonschema_validator_spark.sources.jpeg import decode_jpeg
 

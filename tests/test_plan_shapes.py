@@ -429,6 +429,26 @@ def test_ngram_contamination_broadcast_probe_single_corpus_scan(spark):
     assert _op_count(plan, "Scan parquet") == 2
 
 
+_TOKENIZED = {
+    "word_shingles": lambda dedup, text, t: dedup.word_shingles(t, 5),
+    "repetition_struct": lambda dedup, text, t: text.repetition_struct(t),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TOKENIZED))
+def test_tokenizer_evaluated_once(spark, name):
+    """A text statistic tokenizes each row once: the token array is
+    let-bound, so the optimized plan holds one ``split``, not a copy per
+    shingle, gram order or reference (higher-order functions get no
+    common-subexpression elimination, so every copy runs per row)."""
+    from jsonschema_validator_spark.operators import dedup, text
+
+    df = spark.createDataFrame([("a b a b c",)], "text string")
+    out = df.select(_TOKENIZED[name](dedup, text, F.col("text")).alias("out"))
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1, plan
+
+
 def test_long_shape_unpivot_single_pass(spark):
     """_unpivot_long must reshape with ONE explode projection, never a
     per-stat union — Spark does no CSE across union branches, so the

@@ -500,6 +500,53 @@ def test_streaming_contamination_flags_end_to_end(spark, tmp_path):
     assert any(v[3] for v in got.values())  # benchmark docs flagged
 
 
+def test_stream_decontamination_single_arrow_node(spark):
+    """The stream tokenizes on the JVM with the batch operator's
+    word_shingles: Python runs in one MapInArrow whose input is the
+    shingle array, never the raw text."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from jsonschema_validator_spark.streaming.decontaminate import (
+        streaming_contamination_flags,
+    )
+    from tests.test_plan_shapes import _PYTHON_NODE, _final_plan
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} shares five words here") for i in range(8)],
+        "doc_id long, text string",
+    )
+    out = streaming_contamination_flags(docs, docs.filter(F.col("doc_id") % 3 == 0))
+    out.collect()
+    final = _final_plan(out)
+    assert _PYTHON_NODE.findall(final) == ["MapInArrow"], final
+    inputs = re.search(r"MapInArrow \w+\(([^)]*)\)", final).group(1).split(", ")
+    assert not any(a.startswith("text#") for a in inputs), final
+    assert any(
+        re.search(rf"split\(.*array_distinct\(.* AS {re.escape(a)}\b", final)
+        for a in inputs
+    ), final
+
+
+def test_stream_contamination_uses_jvm_lowercase(spark):
+    """Spark's lower maps U+A7CB to U+0264 and Python's str.lower (3.11)
+    does not: a stream that re-tokenized in Python matched 2 of the
+    doc's 4 shingles against its own JVM-built benchmark set, where the
+    batch operator matches all 4."""
+    from jsonschema_validator_spark.operators.dedup import ngram_contamination
+    from jsonschema_validator_spark.streaming.decontaminate import (
+        streaming_contamination_flags,
+    )
+
+    doc = spark.createDataFrame(
+        [(1, "alpha \ua7cbbeta gamma delta epsilon zeta")], "doc_id int, text string"
+    )
+    for op in (ngram_contamination, streaming_contamination_flags):
+        (row,) = op(doc, doc, shingle_k=3, threshold=0.6).collect()
+        assert tuple(row) == (1, 4, 4, 1.0, True), op.__name__
+
+
 def test_streaming_contamination_bench_size_guard(spark):
     from jsonschema_validator_spark.streaming.decontaminate import (
         benchmark_shingle_set,

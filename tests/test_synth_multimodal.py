@@ -7,11 +7,9 @@ import pytest
 from jsonschema_validator_spark.sources import synth
 from jsonschema_validator_spark.sources.codecs import (
     decode_fdct,
-    decode_fjpg,
     decode_image,
     decode_png,
     encode_fdct,
-    encode_fjpg,
     encode_png,
     psnr,
 )
@@ -22,15 +20,6 @@ N = 4000  # covers every injection schedule at exact counts
 def test_png_roundtrip_lossless():
     px = synth._pixels(42, 1, 24, 17)
     assert np.array_equal(decode_png(encode_png(px)), px)
-
-
-def test_fjpg_lossy_psnr_above_40():
-    # legacy 6-bit stub kept for payloads already on disk
-    px = synth._pixels(42, 2, 32, 32)
-    dec = decode_fjpg(encode_fjpg(px))
-    p = psnr(px, dec)
-    assert p >= 40.0, f"stub lossy codec PSNR {p} < 40 dB"
-    assert np.allclose(px.astype(int), dec.astype(int), atol=3)
 
 
 def test_fdct_lossy_psnr_above_40():

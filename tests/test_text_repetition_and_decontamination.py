@@ -92,12 +92,9 @@ class TestRepetitionMetrics:
         assert _rep_rows(spark, texts) == expected
 
     def test_staged_matches_inline_struct_and_never_shuffles(self, spark):
-        # with_repetition_columns is the hot-path twin of repetition_struct:
-        # identical values, staged projections instead of one duplicated
-        # expression tree (the inline form loses codegen CSE via the HOF
-        # CodegenFallback and re-evaluates the tokenize/gram subtrees —
-        # measured ~13x slower at sf0.1). Values must match exactly and the
-        # plan must stay a pure map stage (no Exchange).
+        # with_repetition_columns is a projection of repetition_struct:
+        # values must match exactly and the plan must stay a pure map
+        # stage (no Exchange).
         from jsonschema_validator_spark.operators.text import (
             with_repetition_columns,
         )
@@ -262,45 +259,6 @@ class TestNgramContamination:
         assert a == b
 
 
-def test_py_shingles_matches_jvm_word_shingles(spark):
-    """The streaming decontamination twin computes shingles in Python
-    (_py_shingles); its batch-parity guarantee rests on that function
-    being EXACTLY operators.dedup.word_shingles. Pin the equivalence on a
-    randomized corpus covering the canonicalization edge cases (mixed
-    case, repeated/mixed whitespace incl. tabs+newlines, short docs,
-    empty, unicode)."""
-    import random
-
-    from jsonschema_validator_spark.operators.dedup import word_shingles
-    from jsonschema_validator_spark.streaming.decontaminate import _py_shingles
-
-    rng = random.Random(4242)
-    words = ["Alpha", "beta", "GAMMA", "δέλτα", "e", "Zeta42", "##", "x-y"]
-    seps = [" ", "  ", "\t", " \t ", "\n", "   "]
-    texts = [""]
-    for _ in range(200):
-        k = rng.randint(1, 12)
-        toks = [rng.choice(words) for _ in range(k)]
-        t = seps[0].join(toks)
-        # random leading/trailing + internal separator noise
-        t = rng.choice(["", " ", "\t"]) + t + rng.choice(["", "  ", "\n"])
-        t = t.replace(" ", rng.choice(seps), rng.randint(0, 3))
-        texts.append(t)
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "i int, text string"
-    )
-    for k in (3, 5):
-        got = {
-            r["i"]: set(r["sh"])
-            for r in df.select(
-                "i", word_shingles(F.col("text"), k).alias("sh")
-            ).collect()
-        }
-        exp = {i: _py_shingles(t, k) for i, t in enumerate(texts)}
-        assert got == exp, f"k={k}"
-
-
 class TestBlankDocReviewRegressions:
     """split('') returns [''] — one EMPTY token — which made blank docs
     maximally 'repetitive' (top_1gram_frac 1.0) and maximally 'diverse'
@@ -323,6 +281,16 @@ class TestBlankDocReviewRegressions:
             ).collect()
         }
         assert inline[0] == 0.0 and inline[1] == 0.0 and inline[2] == 0.5
+
+    def test_null_text_is_null_not_repetitive(self, spark):
+        # NULL text tokenizes to NULL, whose n≥2 grams were [NULL]: one
+        # gram, so top_2gram_frac and top_3gram_frac read 1.0
+        assert _rep_rows(spark, [None, ""]) == [(None, None, None), (0.0, 0.0, 0.0)]
+        df = spark.createDataFrame([(None,)], "text string")
+        (r,) = df.select(repetition_struct(F.col("text")).alias("r")).collect()
+        assert r["r"].asDict() == dict.fromkeys(
+            ["top_1gram_frac", "top_2gram_frac", "top_3gram_frac"]
+        )
 
     def test_blank_doc_no_diversity_credit(self, spark):
         from jsonschema_validator_spark.operators.text import quality_struct
